@@ -10,17 +10,30 @@ Fixes the reference's serving anti-patterns:
  - /train blocked the request handler despite accepting BackgroundTasks
    (reference api/api.py:111-133) → training runs on a worker thread
    with a real job registry.
- - row-at-a-time collect stays ONLY at the request/response boundary
-   (reference api/api.py:183-184 is the one legitimate collect).
+ - /predict ran one distributed Spark job per request (reference
+   api/api.py:176-184). Here the request rows become one Arrow table of
+   float64 columns, which Spark turns into a driver-local relation while
+   it is under ``spark.sql.execution.arrow.localRelationThreshold``. The
+   optimizer folds the fitted pipeline's expressions into that relation
+   (``ConvertToLocalRelation``), so a request is scored on the driver
+   with no Spark job; above the threshold Spark itself falls back to a
+   distributed scan. Each registered model's JVM ``PipelineModel`` is
+   resolved once, at registration, so a request makes no per-stage
+   parameter transfer.
+ - rows the pipeline would silently drop (the feature assembler skips
+   NaN) are rejected up front, so responses stay aligned with requests.
 """
 
 from __future__ import annotations
 
+import math
 import threading
 import time
 import uuid
 from typing import Any
 
+import pyarrow as pa
+from py4j.java_gateway import JavaObject
 from pyspark.ml import PipelineModel
 from pyspark.sql import DataFrame
 
@@ -35,6 +48,9 @@ class ServingService:
         self.orchestrator = orchestrator or PipelineOrchestrator()
         self.jobs: dict[str, dict[str, Any]] = {}
         self.models: dict[str, PipelineModel] = {}
+        #: The JVM ``PipelineModel`` behind each entry of ``models``,
+        #: resolved once at registration; changed only with ``models``.
+        self._jvm_models: dict[str, JavaObject] = {}
         self._lock = threading.Lock()
 
     # -- training jobs ------------------------------------------------------
@@ -54,8 +70,10 @@ class ServingService:
             try:
                 df = self.orchestrator.load(data_path)
                 model, metrics = self.orchestrator.train(df, algorithm, task)
+                jvm_model = model._to_java()
                 with self._lock:
                     self.models[job_id] = model
+                    self._jvm_models[job_id] = jvm_model
                     job.update(status="completed", metrics=metrics,
                                completed_at=time.time())
             except Exception as exc:  # noqa: BLE001 — job surface reports any failure
@@ -80,8 +98,10 @@ class ServingService:
     def register_model(self, name: str, model: PipelineModel | str) -> None:
         if isinstance(model, str):
             model = PipelineModel.load(model)
+        jvm_model = model._to_java()
         with self._lock:
             self.models[name] = model
+            self._jvm_models[name] = jvm_model
 
     def list_models(self) -> list[str]:
         return sorted(self.models)
@@ -97,6 +117,7 @@ class ServingService:
             if name not in self.models:
                 raise KeyError(f"unknown model {name!r}")
             del self.models[name]
+            del self._jvm_models[name]
         return {"status": "deleted", "model_path": name}
 
     def list_models_with_registry(self) -> dict[str, Any]:
@@ -155,15 +176,18 @@ class ServingService:
     # -- prediction ---------------------------------------------------------
     def predict_rows(self, model_name: str, rows: list[list[float]],
                      feature_names: list[str]) -> list[float]:
-        """JSON floats → DataFrame → transform → list (the serving
-        boundary is the only place collect() is allowed — reference
-        api/api.py:176-184)."""
-        model = self.models[model_name]
-        df = self.orchestrator.spark.createDataFrame(
-            [tuple(float(v) for v in r) for r in rows], list(feature_names)
-        )
-        out = model.transform(df)
-        return [float(r["prediction"]) for r in out.select("prediction").collect()]
+        """JSON float rows → one prediction per row, in request order.
+        Raises KeyError for an unknown model and ValueError, naming the
+        row, for a row of the wrong width or with a non-finite or
+        missing value. The rows are scored on the driver with no Spark
+        job while they fit a local relation (module docstring); the
+        collect is the serving boundary (reference api/api.py:176-184)."""
+        with self._lock:
+            jvm_model = self._jvm_models[model_name]
+        spark = self.orchestrator.spark
+        df = spark.createDataFrame(_request_table(rows, feature_names))
+        out = DataFrame(jvm_model.transform(df._jdf), spark)
+        return [float(r[0]) for r in out.select("prediction").collect()]
 
     def predict_batch(self, model_name: str, input_path: str,
                       output_path: str) -> dict[str, Any]:
@@ -174,6 +198,30 @@ class ServingService:
         out: DataFrame = model.transform(df).drop("features", "features_raw")
         out.write.mode("overwrite").parquet(output_path)
         return {"model": model_name, "input": input_path, "output": output_path}
+
+
+def _request_table(rows: list[list[float]],
+                   feature_names: list[str]) -> pa.Table:
+    """Request rows as one Arrow table of float64 columns named
+    ``feature_names``. Every row must yield exactly one prediction: a
+    NULL or NaN cell would make the feature assembler drop the row and
+    misalign the response, so such rows are rejected here."""
+    width = len(feature_names)
+    values = []
+    for i, row in enumerate(rows):
+        try:
+            vals = [float(v) for v in row]
+        except (TypeError, ValueError, OverflowError):
+            raise ValueError(f"row {i}: feature values must be numbers") from None
+        if len(vals) != width:
+            raise ValueError(
+                f"row {i}: {len(vals)} values for {width} feature names")
+        if not all(map(math.isfinite, vals)):
+            raise ValueError(f"row {i}: feature values must be finite")
+        values.append(vals)
+    columns = [pa.array([r[j] for r in values], pa.float64())
+               for j in range(width)]
+    return pa.Table.from_arrays(columns, names=list(feature_names))
 
 
 def build_app(service: ServingService | None = None):
@@ -246,6 +294,8 @@ def build_app(service: ServingService | None = None):
             preds = service.predict_rows(model, features, feature_names)
         except KeyError:
             raise HTTPException(404, f"unknown model: {model!r}")
+        except ValueError as exc:
+            raise HTTPException(422, str(exc))
         return {"predictions": preds}
 
     @app.post("/predict/batch")

@@ -223,6 +223,8 @@ def test_fastapi_routes(monkeypatch):
             return {"job_id": "j1", "status": "queued"}
 
         def predict_rows(self, model, features, feature_names):
+            if model == "known":
+                raise ValueError("row 0: feature values must be finite")
             raise KeyError(model)
 
         def predict_batch(self, model, input_path, output_path):
@@ -249,6 +251,12 @@ def test_fastapi_routes(monkeypatch):
         json={"model": "nope", "features": [[1.0]], "feature_names": ["f1"]},
     )
     assert r.status_code == 404
+    # a row the service refuses (non-finite, wrong width) → 422
+    r = client.post(
+        "/predict",
+        json={"model": "known", "features": [[1.0]], "feature_names": ["f1"]},
+    )
+    assert r.status_code == 422
     # train accepts a minimal valid body
     assert client.post("/train", json={"data_path": "/tmp/x.parquet"}).json()[
         "status"

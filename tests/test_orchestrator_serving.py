@@ -119,22 +119,108 @@ def test_cli_prepare_corpus(spark, tmp_path, capsys, monkeypatch):
     ) == [1, 2]
 
 
-def test_serving_train_job_and_predict(spark, data_path):
+SERVE_PARAMS = {
+    "logistic_regression": {"max_iter": 10},
+    "random_forest": {"num_trees": 10, "max_depth": 4},
+    "decision_tree": {"max_depth": 4},
+    "naive_bayes": {},
+}
+
+
+@pytest.mark.parametrize("algorithm", sorted(SERVE_PARAMS))
+def test_serving_train_job_and_predict(spark, data_path, algorithm):
+    """predict_rows answers exactly what one batch transform of the same
+    rows answers, and runs no Spark job: the request is a driver-local
+    Arrow relation the optimizer folds the pipeline into."""
     svc = ServingService(PipelineOrchestrator(
         {"features": {"categorical_columns": [], "numeric_columns": ["f1", "f2"]},
-         "model": {"params": {"num_trees": 10, "max_depth": 4}}}, spark=spark
+         "model": {"params": SERVE_PARAMS[algorithm]}}, spark=spark
     ))
-    job = svc.submit_train(data_path, "random_forest", "classification", blocking=True)
+    job = svc.submit_train(data_path, algorithm, "classification", blocking=True)
     assert job["status"] == "completed", job["error"]
     assert 0.0 <= job["metrics"]["accuracy"] <= 1.0
     assert svc.job_status(job["job_id"])["status"] == "completed"
 
     # the reference's predict surface takes bare float rows
     # (api/api.py:176-184) — numeric-only feature set
-    preds = svc.predict_rows(
-        job["job_id"], [[1.0, 2.0], [9.0, 3.0]], ["f1", "f2"]
-    )
-    assert len(preds) == 2 and all(p in (0.0, 1.0) for p in preds)
+    rows = [[1.0, 2.0], [9.0, 3.0], [5.0, 0.0], [7.5, 6.0]]
+    sc = spark.sparkContext
+    group = f"serve-{algorithm}"
+    sc.setJobGroup(group, "predict_rows")
+    try:
+        preds = svc.predict_rows(job["job_id"], rows, ["f1", "f2"])
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+    batch = svc.models[job["job_id"]].transform(
+        spark.createDataFrame(rows, ["f1", "f2"]))
+    assert preds == [r[0] for r in batch.select("prediction").collect()]
+
+
+def test_serving_predict_rows_validates_request(spark, data_path):
+    """Every request row gets exactly one prediction or the request is
+    refused: an empty request answers [], and a row the feature
+    assembler would silently skip (NaN, null) or a row of the wrong
+    width raises ValueError naming the row (the /predict route's 422)."""
+    svc = ServingService(PipelineOrchestrator(
+        {"features": {"categorical_columns": [], "numeric_columns": ["f1", "f2"]},
+         "model": {"params": {"max_iter": 5}}}, spark=spark
+    ))
+    job = svc.submit_train(data_path, "logistic_regression", "classification",
+                           blocking=True)
+    assert job["status"] == "completed", job["error"]
+    name, names = job["job_id"], ["f1", "f2"]
+    assert svc.predict_rows(name, [], names) == []
+    bad_rows = [
+        ([1.0, float("nan")], "must be finite"),
+        ([float("inf"), 1.0], "must be finite"),
+        ([None, 1.0], "must be numbers"),
+        ([1.0, 2.0, 3.0], "3 values for 2"),
+        ([1.0], "1 values for 2"),
+    ]
+    for bad, message in bad_rows:
+        with pytest.raises(ValueError, match=f"row 2: .*{message}"):
+            svc.predict_rows(name, [[1.0, 2.0], [9.0, 3.0], bad], names)
+
+
+def test_serving_predict_rows_concurrent(spark, data_path):
+    """Concurrent handlers share one resolved JVM pipeline: more
+    threads than cores, with a short switch interval, each get the
+    answer a lone request gets."""
+    import sys
+    import threading
+
+    svc = ServingService(PipelineOrchestrator(
+        {"features": {"categorical_columns": [], "numeric_columns": ["f1", "f2"]},
+         "model": {"params": {"num_trees": 5, "max_depth": 3}}}, spark=spark
+    ))
+    job = svc.submit_train(data_path, "random_forest", "classification",
+                           blocking=True)
+    assert job["status"] == "completed", job["error"]
+    requests = [[[float(i % 10), float(j)] for j in range(i % 4 + 1)]
+                for i in range(8)]
+    want = [svc.predict_rows(job["job_id"], r, ["f1", "f2"]) for r in requests]
+    got: dict[int, list[list[float]]] = {i: [] for i in range(len(requests))}
+
+    def handler(i: int) -> None:
+        for _ in range(3):
+            got[i].append(
+                svc.predict_rows(job["job_id"], requests[i], ["f1", "f2"]))
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=handler, args=(i,), daemon=True)
+                   for i in range(len(requests))]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert got == {i: [w] * 3 for i, w in enumerate(want)}
 
 
 def test_serving_async_job(spark, data_path):
@@ -189,9 +275,8 @@ def test_serving_delete_model(spark, data_path):
     reference's {"status": "deleted", "model_path"} shape, the model
     disappears from the listing, and a re-delete (or deleting an
     unknown name) raises KeyError → the route's 404 — unlike the
-    reference stub, which answers "deleted" without a registry."""
-    import pytest
-
+    reference stub, which answers "deleted" without a registry.
+    Re-registering a name swaps the model predict_rows serves."""
     svc = ServingService(PipelineOrchestrator(
         {"features": {"categorical_columns": [], "numeric_columns": ["f1", "f2"]},
          "model": {"params": {"max_iter": 5}}}, spark=spark
@@ -201,6 +286,18 @@ def test_serving_delete_model(spark, data_path):
     assert ok["status"] == "completed", ok["error"]
     name = ok["job_id"]
     assert svc.list_models() == [name]
+
+    # a model fitted on the flipped label answers the same rows the
+    # other way round
+    rows = [[1.0, 2.0], [9.0, 3.0]]
+    before = svc.predict_rows(name, rows, ["f1", "f2"])
+    flipped, _ = svc.orchestrator.train(
+        spark.read.parquet(data_path).withColumn("label", 1.0 - F.col("label")),
+        "logistic_regression", "classification")
+    svc.register_model(name, flipped)
+    assert svc.list_models() == [name]
+    assert svc.predict_rows(name, rows, ["f1", "f2"]) == [1.0 - p for p in before]
+
     res = svc.delete_model(name)
     assert res == {"status": "deleted", "model_path": name}
     assert svc.list_models() == []
