@@ -1057,6 +1057,21 @@ def connected_components_alternating(
         .distinct()
         .localCheckpoint()
     )
+
+    def labels(edges: DataFrame) -> DataFrame:
+        # Fixed point = stars (child, root): labels are the star edges
+        # plus each root labelling itself.
+        return edges.select(F.col("u").alias("id"), F.col("v").alias("comp")).unionByName(
+            edges.select(F.col("v").alias("id"), F.col("v").alias("comp")).distinct()
+        )
+
+    # An empty edge set (a micro-batch with no duplicate pairs) is
+    # already the fixed point: skip the round's two shuffles and the
+    # convergence check.
+    if edges.isEmpty():
+        if stats is not None:
+            stats["rounds"] = 0
+        return labels(edges)
     w = Window.partitionBy("u")
     for rounds in range(1, max_iter + 1):
         # Large-star: gather over both directions; m = min(N(u) ∪ {u});
@@ -1094,11 +1109,7 @@ def connected_components_alternating(
         if unchanged:
             if stats is not None:
                 stats["rounds"] = rounds
-            # Fixed point = stars (child, root): labels are the star
-            # edges plus each root labelling itself.
-            return edges.select(F.col("u").alias("id"), F.col("v").alias("comp")).unionByName(
-                edges.select(F.col("v").alias("id"), F.col("v").alias("comp")).distinct()
-            )
+            return labels(edges)
     raise RuntimeError(
         f"connected_components_alternating did not converge within "
         f"max_iter={max_iter} rounds — unexpected for any graph with "

@@ -30,7 +30,17 @@ def spark():
         app_name="engine-tests",
         master="local[4]",
         shuffle_partitions=4,
-        extra_confs={"spark.ui.enabled": "false", "spark.ui.showConsoleProgress": "false"},
+        extra_confs={
+            "spark.ui.enabled": "false",
+            "spark.ui.showConsoleProgress": "false",
+            # PySpark's DataFrame call-site capture adds ~4 py4j round
+            # trips (active session, conf read, origin set/clear) to
+            # every Column/DataFrame API call; the streaming-ingest
+            # tests build thousands of expressions per micro-batch, so
+            # it cost ~14% of their wall clock. It only enriches error
+            # messages — no test reads it.
+            "spark.python.sql.dataFrameDebugging.enabled": "false",
+        },
     )
     yield s
     s.stop()

@@ -284,14 +284,18 @@ def test_polynomial_and_pca(spark):
 
 
 def test_new_registry_algorithms_fit_and_predict(spark):
-    """Fit smoke for the round-2 registry additions on a tiny separable
-    binary problem; every estimator must produce a prediction column."""
+    """Fit smoke for the round-2 registry additions on a tiny binary
+    problem; every estimator must produce a prediction column. The
+    label is f1's parity, which no hyperplane separates, so LinearSVC
+    never meets its tolerance and runs every iteration (~3 Spark jobs
+    each): ``max_iter`` is capped for the two SVC entries, which still
+    exercises the registry's param plumbing."""
     rows = [(float(i % 10), float((i * 7) % 10), float(i % 2)) for i in range(60)]
     df = _with_features(spark.createDataFrame(rows, ["f1", "f2", "label"]))
     for algo, task, params in [
         ("decision_tree", "classification", {}),
-        ("linear_svc", "classification", {}),
-        ("one_vs_rest", "classification", {}),
+        ("linear_svc", "classification", {"max_iter": 10}),
+        ("one_vs_rest", "classification", {"max_iter": 10}),
         ("mlp", "classification", {"layers": [2, 5, 2]}),
         ("decision_tree", "regression", {}),
         ("isotonic", "regression", {}),
