@@ -3097,11 +3097,11 @@ def _stage_id_shards(
 #: once and the repeated timings isolate the streaming path.
 _PROBE_COUNTS: dict[str, tuple[int, ...]] = {}
 
-#: q184/q187 share ONE staged postings ingest per input shard set — the
-#: ingest is q178-measured machinery; the postings QUERIES are what
-#: these two probes add, so the second of the pair reuses the landed
-#: state (the _stage_id_shards scaffolding precedent). Session-temp;
-#: read-only after build.
+#: q178/q184/q187/q188 share ONE staged postings ingest per input shard
+#: set (and q189/q192-q194 one positional one) — the first probe of a
+#: session pays the ingest, the rest reuse the landed state (the
+#: _stage_id_shards scaffolding precedent). Session-temp; read-only
+#: after build.
 _POSTINGS_INGEST_CACHE: dict[tuple[str, bool], str] = {}
 
 
@@ -3109,8 +3109,8 @@ def _staged_postings_ingest(
     spark: SparkSession, sf_dir: str, positions: bool = False
 ) -> str:
     """Run (once per session per (input set, layout)) the documents
-    ingest with maintain_lexicon + bucketed maintain_postings over the
-    staged id shards; return the output state path. ``positions=True``
+    ingest with bucketed maintain_postings (postings + lexicon) over
+    the staged id shards; return the output state path. ``positions=True``
     builds the POSITIONAL layout (a distinct state — q189's phrase
     probe needs offsets; the BM25/boolean probes share the leaner
     positionless one)."""
@@ -3129,7 +3129,6 @@ def _staged_postings_ingest(
         out,
         os.path.join(base, "ck"),
         apply_quality=False,
-        maintain_lexicon=True,
         maintain_postings=True,
         postings_n_buckets=8,
         postings_positions=bool(positions),
@@ -3178,7 +3177,6 @@ def _staged_merged_ingest(spark: SparkSession, sf_dir: str) -> str:
             out,
             os.path.join(base, f"ck_{name}"),
             apply_quality=False,
-            maintain_lexicon=True,
             maintain_postings=True,
             postings_n_buckets=8,
         )
@@ -3748,48 +3746,30 @@ def q177_pq_residual_distortion(
 def q178_incremental_bm25_probe(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Incremental lexical retrieval (VERDICT r13 item 4 —
-    streaming.corpus maintain_lexicon + text.bm25_topk_from_lexicon):
-    q163's shard replay through the REAL ingest_documents_stream path
-    (quality gate OFF, so landed = min-id per normalized-text
-    fingerprint), maintaining the ``{out}_lexicon`` state — per-batch
-    INTEGER partials of (df, cnt) per token plus (n_docs, sum_dl) —
-    then answering the q126 BM25 query with N, Σdl and per-term df
-    read from THAT state instead of a corpus-wide aggregation pass.
-    At 100 TB the two corpus-sized global aggregates become a read of
-    a vocab-sized summary. Exact end to end: integer partial sums
-    equal the one-shot statistics, so the oracle twin is the q126
-    BM25 shape over the SQL-expressed landed set (min doc_id per
-    md5-normalized text). Staging shares q163's per-(sf, mtime)
-    cache."""
-    import shutil
-    import tempfile
-
+    """Incremental lexical retrieval: q163's shard replay through the
+    REAL ingest_documents_stream path (quality gate OFF, so landed =
+    min-id per normalized-text fingerprint), then the q126 BM25 query
+    (top-12) answered by text.bm25_topk_from_postings with N, Σdl and
+    per-term df read from the ``{out}_lexicon`` state — per-batch
+    INTEGER partials — instead of a corpus-wide aggregation pass. At
+    100 TB the two corpus-sized global aggregates become a read of a
+    vocab-sized summary. Exact end to end: integer partial sums equal
+    the one-shot statistics, so the oracle twin is the q126 BM25
+    shape over the SQL-expressed landed set (min doc_id per
+    md5-normalized text). The ingested state is the session-shared
+    one q184/q187/q188 probe (:func:`_staged_postings_ingest`)."""
     from big_data_ml_pipeline_spark.streaming import corpus as corpus_stream
 
-    in_dir = _stage_id_shards(spark, sf_dir, "documents", "doc_id")
-    base = tempfile.mkdtemp(prefix="q178_")
-    try:
-        out = os.path.join(base, "out")
-        corpus_stream.ingest_documents_stream(
-            corpus_stream.read_documents_stream(spark, in_dir),
-            out,
-            os.path.join(base, "ck"),
-            apply_quality=False,
-            maintain_lexicon=True,
-        )
-        landed = spark.read.parquet(out)
-        result = text_ops.bm25_topk_from_lexicon(
-            landed,
-            spark.read.parquet(out + "_lexicon"),
-            Q126_BM25_TERMS,
-            k=12,
-            k1=Q126_BM25_K1,
-            b=Q126_BM25_B,
-        )
-        rows = result.collect()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    out = _staged_postings_ingest(spark, sf_dir)
+    result = text_ops.bm25_topk_from_postings(
+        corpus_stream.read_postings(spark, out),
+        spark.read.parquet(out + "_lexicon"),
+        Q126_BM25_TERMS,
+        k=12,
+        k1=Q126_BM25_K1,
+        b=Q126_BM25_B,
+    )
+    rows = result.collect()
     return spark.createDataFrame(rows, result.schema)
 
 
@@ -4061,10 +4041,10 @@ def q184_postings_bm25_probe(
 ) -> DataFrame:
     """Inverted-postings lexical retrieval (VERDICT r14 item 1 —
     streaming.corpus maintain_postings + text.bm25_topk_from_postings):
-    q178's shard replay through ingest_documents_stream, now ALSO
-    maintaining the ``{out}_postings`` state — one (batch_id, token,
-    doc_id, tf, dl) row per landed (doc, token), kept as a BUCKETED
-    table on token — then answering the q126 BM25 query (top-15)
+    q178's shard replay through ingest_documents_stream, maintaining
+    the ``{out}_postings`` state — one (batch_id, token, doc_id, tf,
+    dl) row per landed (doc, token), kept as a BUCKETED table on
+    token — then answering the q126 BM25 query (top-15)
     with ZERO corpus reads: global stats from the lexicon, per-doc
     (tf, dl) from the postings pruned to the query terms' buckets.
     This is the classical inverted-index probe as a Spark plan: at
@@ -4072,9 +4052,8 @@ def q184_postings_bm25_probe(
     corpus. Integer partials equal the one-shot statistics, so the
     oracle twin is the q178 one-shot BM25 over the SQL-landed set at
     LIMIT 15. Input staging shares q163/q178's per-(sf, mtime) cache;
-    the INGESTED state is shared with q187 (one ingest per session —
-    the ingest machinery is q178's measurement; the postings QUERY is
-    this probe's)."""
+    the INGESTED state is shared with q178/q187/q188 (one ingest per
+    session)."""
     from big_data_ml_pipeline_spark.streaming import corpus as corpus_stream
 
     out = _staged_postings_ingest(spark, sf_dir)

@@ -1891,6 +1891,11 @@ def excise_duplicate_spans(
     )
 
 
+#: The phrase pseudo-term's name in :func:`phrase_bm25_topk_from_postings`
+#: — contains a NUL, so :func:`tokens` can never emit it.
+_PHRASE_TERM = "\x00phrase"
+
+
 def bm25_topk(
     df: DataFrame,
     query_terms: tuple[str, ...],
@@ -1906,11 +1911,9 @@ def bm25_topk(
     baseline every RAG / hard-negative-mining pipeline needs next to
     the embedding top-k (q28/q122).
 
-    Determinism (oracle-checkable): idf is quantized to integer
-    micro-units per term, the per-(doc, term) score is assembled from
-    INTEGER tf / dl / N / Σdl in a fixed expression order and quantized
-    again, and the per-document score is a BIGINT sum — bit-identical
-    across partitionings and engines (the q106 pattern).
+    Determinism (oracle-checkable): scoring goes through
+    :func:`_bm25_score`, whose integer/quantized arithmetic is
+    bit-identical across partitionings and engines (the q106 pattern).
 
     Scale shape: tokenize once → the token stream is filtered to the
     query terms BEFORE the (id, term) aggregation, so the only
@@ -1943,245 +1946,28 @@ def bm25_topk(
         .agg(F.count("*").cast("long").alias("tf"))
     )
     dfreq = tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-    # stats is consumed ONCE (one scalar-agg corpus pass); n_docs and
-    # sum_dl ride the tiny idf table into the scoring join.
-    idf_q = dfreq.crossJoin(F.broadcast(stats)).select(
-        "term",
-        "n_docs",
-        "sum_dl",
-        F.round(
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            )
-            * 1e6
-        )
-        .cast("long")
-        .alias("__idf_q"),
-    )
-    scored = (
-        tf.join(F.broadcast(idf_q), "term")
-        .select(
-            "id",
-            F.round(
-                (F.col("__idf_q").cast("double") / 1e6)
-                * (F.col("tf") * F.lit(k1 + 1.0))
-                / (
-                    F.col("tf")
-                    + F.lit(k1 * (1.0 - b))
-                    + F.lit(k1 * b)
-                    * (F.col("dl") * F.col("n_docs")).cast("double")
-                    / F.col("sum_dl")
-                )
-                * 1e6
-            )
-            .cast("long")
-            .alias("__score_q"),
-        )
-    )
-    per_doc = scored.groupBy("id").agg(
-        F.count("*").cast("long").alias("n_terms"),
-        F.sum("__score_q").cast("long").alias("__sum_q"),
-    )
-    return (
-        per_doc.select(
-            F.col("id").alias(id_col),
-            "n_terms",
-            (F.col("__sum_q").cast("double") / 1e6).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
+    return _bm25_topk_tail(
+        _bm25_per_doc(_bm25_score(tf, dfreq, stats, k1, b)),
+        k, id_col, "n_terms",
     )
 
 
-def bm25_topk_from_lexicon(
-    df: DataFrame,
-    lexicon: DataFrame,
-    query_terms: tuple[str, ...],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+def _bm25_score(
+    tf: DataFrame, dfreq: DataFrame, stats: DataFrame, k1: float, b: float
 ) -> DataFrame:
-    """:func:`bm25_topk` whose GLOBAL statistics — N, Σdl and per-term
-    document frequency — come from the streaming ingest's incremental
-    LEXICON state (``ingest_documents_stream(maintain_lexicon=True)``
-    → ``{out}_lexicon``) instead of a corpus-wide aggregation pass
-    (VERDICT r13 item 4). The per-document side (tf, dl over matched
-    postings) still reads the landed corpus filtered to the query
-    terms — that scan is query-term-bounded after pushdown — but the
-    two corpus-sized global aggregates (COUNT/SUM over every doc, df
-    over every posting) become a read of the vocab-sized summary
-    table: no GLOBAL aggregate touches the corpus at query time (the
-    per-doc tf side still reads it; :func:`bm25_topk_from_postings`
-    removes that scan too via the postings state).
+    """The one quantized BM25 kernel: every BM25 ranking in this module
+    scores its (doc, term) pairs here, so the full-scan, postings,
+    pruned and phrase variants are bit-identical to each other and to
+    their DuckDB twins. ``tf`` carries (id, dl, term, tf) rows,
+    ``dfreq`` (term, df) rows and ``stats`` the one (n_docs, sum_dl)
+    row; returns (id, tf, __score_q).
 
-    Exactness: the lexicon partials are integer sums per batch of
-    exactly the quantities bm25_topk aggregates one-shot (df = docs
-    containing the term, once per landed doc; n_docs/sum_dl from the
-    same tokenizer), so every downstream integer/quantized expression
-    — reproduced here verbatim from bm25_topk — is bit-identical;
-    incremental == batch is pinned in
-    tests/test_streaming_corpus.py-style pytest and the q178 oracle
-    twin. Replayed-batch duplicate partials are removed by the
-    (batch_id, token) dedup the state layout guarantees exact."""
-    terms = F.array(*[F.lit(t) for t in query_terms])
-    lex = lexicon.dropDuplicates(["batch_id", "token"])
-    stats = lex.filter(F.col("token").isNull()).agg(
-        F.sum("n_docs").cast("long").alias("n_docs"),
-        F.sum("sum_dl").cast("long").alias("sum_dl"),
-    )
-    dfreq = (
-        lex.filter(F.col("token").isin(*[str(t) for t in query_terms]))
-        .groupBy(F.col("token").alias("term"))
-        .agg(F.sum("df").cast("long").alias("df"))
-    )
-    base = df.select(
-        F.col(id_col).alias("id"),
-        tokens(F.lower(F.col(text_col))).alias("__toks"),
-    ).select(
-        "id",
-        F.size("__toks").cast("long").alias("dl"),
-        F.filter("__toks", lambda t: F.array_contains(terms, t)).alias(
-            "__hits"
-        ),
-    )
-    tf = (
-        base.select("id", "dl", F.explode_outer("__hits").alias("term"))
-        .filter(F.col("term").isNotNull())
-        .groupBy("id", "dl", "term")
-        .agg(F.count("*").cast("long").alias("tf"))
-    )
-    idf_q = dfreq.crossJoin(F.broadcast(stats)).select(
-        "term",
-        "n_docs",
-        "sum_dl",
-        F.round(
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            )
-            * 1e6
-        )
-        .cast("long")
-        .alias("__idf_q"),
-    )
-    scored = (
-        tf.join(F.broadcast(idf_q), "term")
-        .select(
-            "id",
-            F.round(
-                (F.col("__idf_q").cast("double") / 1e6)
-                * (F.col("tf") * F.lit(k1 + 1.0))
-                / (
-                    F.col("tf")
-                    + F.lit(k1 * (1.0 - b))
-                    + F.lit(k1 * b)
-                    * (F.col("dl") * F.col("n_docs")).cast("double")
-                    / F.col("sum_dl")
-                )
-                * 1e6
-            )
-            .cast("long")
-            .alias("__score_q"),
-        )
-    )
-    per_doc = scored.groupBy("id").agg(
-        F.count("*").cast("long").alias("n_terms"),
-        F.sum("__score_q").cast("long").alias("__sum_q"),
-    )
-    return (
-        per_doc.select(
-            F.col("id").alias(id_col),
-            "n_terms",
-            (F.col("__sum_q").cast("double") / 1e6).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
-def bm25_topk_from_postings(
-    postings: DataFrame,
-    lexicon: DataFrame,
-    query_terms: tuple[str, ...],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """:func:`bm25_topk` answered ENTIRELY from ingest state — zero
-    corpus reads at query time (VERDICT r14 item 1). Global statistics
-    (N, Σdl, per-term df) come from the incremental lexicon exactly as
-    :func:`bm25_topk_from_lexicon`; the per-document side (tf, dl)
-    comes from the INVERTED POSTINGS state
-    (``ingest_documents_stream(maintain_postings=True)`` →
-    ``{out}_postings``) filtered to the query terms. The token filter
-    reaches the parquet scan as a pushed IN-predicate — and with
-    ``postings_n_buckets`` the state is a bucketed-on-token table, so
-    the scan PRUNES to the buckets the query terms hash to: read cost
-    tracks the query terms' posting lists, not the corpus. That is
-    the classical search-engine query shape (term-bounded inverted
-    index probe) expressed as a Spark plan.
-
-    Exactness: postings rows are the per-(doc, token) integer (tf, dl)
-    the one-shot tokenizer produces, written once per landed doc
-    (replayed-batch duplicates removed by the (batch_id, token,
-    doc_id) dedup the state layout guarantees exact), so every
-    quantized scoring expression — reproduced verbatim from
-    :func:`bm25_topk` — is bit-identical to the batch computation;
-    postings == batch is pinned in tests and the q184 oracle twin."""
-    tlist = [str(t) for t in query_terms]
-    stats = (
-        lexicon.dropDuplicates(["batch_id", "token"])
-        .filter(F.col("token").isNull())
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("sum_dl").cast("long").alias("sum_dl"),
-        )
-    )
-    dfreq = (
-        lexicon.filter(F.col("token").isin(*tlist))
-        .dropDuplicates(["batch_id", "token"])
-        .groupBy(F.col("token").alias("term"))
-        .agg(F.sum("df").cast("long").alias("df"))
-    )
-    tf = (
-        postings.filter(F.col("token").isin(*tlist))
-        .dropDuplicates(["batch_id", "token", "doc_id"])
-        .select(
-            F.col("doc_id").alias("id"),
-            F.col("dl"),
-            F.col("token").alias("term"),
-            F.col("tf"),
-        )
-    )
-    scored = _bm25_postings_score(tf, dfreq, stats, k1, b)
-    per_doc = scored.groupBy("id").agg(
-        F.count("*").cast("long").alias("n_terms"),
-        F.sum("__score_q").cast("long").alias("__sum_q"),
-    )
-    return (
-        per_doc.select(
-            F.col("id").alias(id_col),
-            "n_terms",
-            (F.col("__sum_q").cast("double") / 1e6).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
-def _bm25_postings_score(tf: DataFrame, dfreq: DataFrame, stats: DataFrame,
-                         k1: float, b: float):
-    """The quantized per-(doc, term) BM25 scoring pipeline shared by
-    :func:`bm25_topk_from_postings` and :func:`bm25_topk_wand` —
-    reproduced verbatim from :func:`bm25_topk` so every pruned variant
-    is bit-identical to the unpruned one. ``tf`` carries (id, dl,
-    term, tf) posting rows; returns (id, __score_q) rows."""
+    idf is quantized to integer micro-units per term, and the
+    per-(doc, term) score is assembled from INTEGER tf / dl / N / Σdl
+    in a fixed expression order and quantized again, so a BIGINT sum
+    of ``__score_q`` is order-free."""
+    # stats is consumed ONCE; n_docs and sum_dl ride the tiny idf table
+    # into the scoring join.
     idf_q = dfreq.crossJoin(F.broadcast(stats)).select(
         "term",
         "n_docs",
@@ -2199,6 +1985,7 @@ def _bm25_postings_score(tf: DataFrame, dfreq: DataFrame, stats: DataFrame,
     )
     return tf.join(F.broadcast(idf_q), "term").select(
         "id",
+        "tf",
         F.round(
             (F.col("__idf_q").cast("double") / 1e6)
             * (F.col("tf") * F.lit(k1 + 1.0))
@@ -2213,6 +2000,103 @@ def _bm25_postings_score(tf: DataFrame, dfreq: DataFrame, stats: DataFrame,
         )
         .cast("long")
         .alias("__score_q"),
+    )
+
+
+def _bm25_per_doc(scored: DataFrame) -> DataFrame:
+    """(id, n_terms, __sum_q): the per-document BIGINT sum of
+    :func:`_bm25_score` rows."""
+    return scored.groupBy("id").agg(
+        F.count("*").cast("long").alias("n_terms"),
+        F.sum("__score_q").cast("long").alias("__sum_q"),
+    )
+
+
+def _bm25_topk_tail(
+    per_doc: DataFrame, k: int, id_col: str, *cols: str
+) -> DataFrame:
+    """The shared BM25 top-k: (id_col, *cols, score) by score desc, id
+    asc, k rows, with score = ``__sum_q`` micro-units as a double."""
+    return (
+        per_doc.select(
+            F.col("id").alias(id_col),
+            *cols,
+            (F.col("__sum_q").cast("double") / 1e6).alias("score"),
+        )
+        .orderBy(F.col("score").desc(), F.col(id_col).asc())
+        .limit(k)
+    )
+
+
+def _lexicon_stats(
+    lexicon: DataFrame, terms: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """Global BM25 statistics from the ingest lexicon state
+    (``{out}_lexicon``): the one-row (n_docs, sum_dl) frame and the
+    (term, df) rows of ``terms``. Replayed-batch duplicate partials
+    are removed by the (batch_id, token) dedup the state layout
+    guarantees exact."""
+    lex = lexicon.dropDuplicates(["batch_id", "token"])
+    stats = lex.filter(F.col("token").isNull()).agg(
+        F.sum("n_docs").cast("long").alias("n_docs"),
+        F.sum("sum_dl").cast("long").alias("sum_dl"),
+    )
+    dfreq = (
+        lex.filter(F.col("token").isin(*terms))
+        .groupBy(F.col("token").alias("term"))
+        .agg(F.sum("df").cast("long").alias("df"))
+    )
+    return stats, dfreq
+
+
+def _postings_tf(postings: DataFrame, terms: list[str]) -> DataFrame:
+    """(id, dl, term, tf) rows of the inverted postings state for
+    ``terms``. The token IN-filter reaches the (bucket-pruned) parquet
+    scan; replayed-batch duplicates are removed by the (batch_id,
+    token, doc_id) dedup."""
+    return (
+        postings.filter(F.col("token").isin(*terms))
+        .dropDuplicates(["batch_id", "token", "doc_id"])
+        .select(
+            F.col("doc_id").alias("id"),
+            F.col("dl"),
+            F.col("token").alias("term"),
+            F.col("tf"),
+        )
+    )
+
+
+def bm25_topk_from_postings(
+    postings: DataFrame,
+    lexicon: DataFrame,
+    query_terms: tuple[str, ...],
+    k: int = 10,
+    k1: float = 1.2,
+    b: float = 0.75,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """:func:`bm25_topk` answered ENTIRELY from ingest state
+    (``ingest_documents_stream(maintain_postings=True)``) — zero corpus
+    reads at query time. Global statistics (N, Σdl, per-term df) come
+    from the incremental ``{out}_lexicon`` partials; the per-document
+    side (tf, dl) comes from the INVERTED POSTINGS state
+    ``{out}_postings`` filtered to the query terms. The token filter
+    reaches the parquet scan as a pushed IN-predicate — and with
+    ``postings_n_buckets`` the state is a bucketed-on-token table, so
+    the scan PRUNES to the buckets the query terms hash to: read cost
+    tracks the query terms' posting lists, not the corpus. That is
+    the classical search-engine query shape (term-bounded inverted
+    index probe) expressed as a Spark plan.
+
+    Exactness: lexicon and postings rows are integer partials of
+    exactly the quantities :func:`bm25_topk` aggregates one-shot, each
+    landed doc counted once, and both paths score through
+    :func:`_bm25_score` — so the ranking is bit-identical to the batch
+    computation (pinned in tests and by the q178/q184 oracle twins)."""
+    tlist = [str(t) for t in query_terms]
+    return _bm25_topk_tail(
+        _bm25_terms_per_doc(postings, lexicon, tlist, k1, b),
+        k, id_col, "n_terms",
     )
 
 
@@ -2288,7 +2172,7 @@ def bm25_topk_wand(
     delegates rather than risk a corpus-scale broadcast (ADVICE r16).
 
     Requires a lexicon with the (max_tf, min_dl) impact columns
-    (``ingest_documents_stream(maintain_lexicon=True)`` writes them;
+    (``ingest_documents_stream(maintain_postings=True)`` writes them;
     older states must re-ingest or fall back to the unpruned query).
 
     ``prune_stats``: test/diagnostic hook — when a dict is passed it
@@ -2376,35 +2260,9 @@ def bm25_topk_wand(
         )
         return int(math.floor(idf * g * 1e6)) + slack
 
-    stats = lex.filter(F.col("token").isNull()).agg(
-        F.sum("n_docs").cast("long").alias("n_docs"),
-        F.sum("sum_dl").cast("long").alias("sum_dl"),
-    )
-
-    def _tf(term_set: list[str]) -> DataFrame:
-        return (
-            postings.filter(F.col("token").isin(*term_set))
-            .dropDuplicates(["batch_id", "token", "doc_id"])
-            .select(
-                F.col("doc_id").alias("id"),
-                F.col("dl"),
-                F.col("token").alias("term"),
-                F.col("tf"),
-            )
-        )
-
-    def _dfreq(term_set: list[str]) -> DataFrame:
-        return (
-            lex.filter(F.col("token").isin(*term_set))
-            .groupBy(F.col("token").alias("term"))
-            .agg(F.sum("df").cast("long").alias("df"))
-        )
-
     # Pass 1: rare terms only — the k-th best partial sum is θ₀.
     rare_topk = (
-        _bm25_postings_score(_tf(seed), _dfreq(seed), stats, k1, b)
-        .groupBy("id")
-        .agg(F.sum("__score_q").cast("long").alias("__sum_q"))
+        _bm25_terms_per_doc(postings, lexicon, seed, k1, b)
         .orderBy(F.col("__sum_q").desc(), F.col("id").asc())
         .limit(k)
         .collect()
@@ -2439,15 +2297,8 @@ def bm25_topk_wand(
     # non-essential lists, broadcast-semi-join filtered map-side (the
     # pushed filter on the common terms' postings), never
     # doc-shuffled whole.
-    ess_part = (
-        _bm25_postings_score(_tf(essential), _dfreq(essential), stats, k1, b)
-        .groupBy("id")
-        .agg(
-            F.count("*").cast("long").alias("__ess_n"),
-            F.sum("__score_q").cast("long").alias("__ess_q"),
-        )
-    )
-    cand = ess_part.filter(F.col("__ess_q") + F.lit(int(acc)) >= theta0)
+    ess_part = _bm25_terms_per_doc(postings, lexicon, essential, k1, b)
+    cand = ess_part.filter(F.col("__sum_q") + F.lit(int(acc)) >= theta0)
     if prune_stats is not None:
         prune_stats.update(
             delegated=False,
@@ -2456,35 +2307,23 @@ def bm25_topk_wand(
             n_essential_docs=ess_part.count(),
             n_candidates=cand.count(),
         )
-    ntf = _tf(non_essential).join(
-        F.broadcast(cand.select("id")), on="id", how="left_semi"
-    )
-    ne_part = (
-        _bm25_postings_score(ntf, _dfreq(non_essential), stats, k1, b)
-        .groupBy("id")
-        .agg(
-            F.count("*").cast("long").alias("__ne_n"),
-            F.sum("__score_q").cast("long").alias("__ne_q"),
-        )
+    ne_part = _bm25_terms_per_doc(
+        postings, lexicon, non_essential, k1, b, only_ids=cand.select("id")
+    ).select(
+        "id",
+        F.col("n_terms").alias("__ne_n"),
+        F.col("__sum_q").alias("__ne_q"),
     )
     per_doc = cand.join(ne_part, on="id", how="left").select(
         "id",
         (
-            F.col("__ess_n") + F.coalesce(F.col("__ne_n"), F.lit(0))
+            F.col("n_terms") + F.coalesce(F.col("__ne_n"), F.lit(0))
         ).cast("long").alias("n_terms"),
         (
-            F.col("__ess_q") + F.coalesce(F.col("__ne_q"), F.lit(0))
+            F.col("__sum_q") + F.coalesce(F.col("__ne_q"), F.lit(0))
         ).cast("long").alias("__sum_q"),
     )
-    return (
-        per_doc.select(
-            F.col("id").alias(id_col),
-            "n_terms",
-            (F.col("__sum_q").cast("double") / 1e6).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return _bm25_topk_tail(per_doc, k, id_col, "n_terms")
 
 
 def boolean_and_topk_from_postings(
@@ -2770,9 +2609,8 @@ def phrase_bm25_topk_from_postings(
     occurrence count, df = the number of phrase-matching docs, the
     same dl/global stats, the same saturation curve (the
     Indri/Galago-style weighted-#od composition, Metzler & Croft
-    2005). Everything is the established quantized-integer pipeline
-    (idf rounded to micro-units, per-score rounding identical to
-    :func:`_bm25_postings_score`), so the result is EXACT against a
+    2005). The terms and the pseudo-term both score through
+    :func:`_bm25_score`, so the result is EXACT against a
     DuckDB twin that re-derives occurrences and scores one-shot from
     the text. Zero corpus reads: occurrences from positional
     postings, term stats from the lexicon, phrase df as a one-row
@@ -2781,64 +2619,37 @@ def phrase_bm25_topk_from_postings(
     score) by score desc, id asc, k rows."""
     ph = _phrase_occurrences(postings, phrase_terms, "phrase_bm25_topk")
     distinct = sorted({str(t) for t in phrase_terms})
-    stats = (
-        lexicon.dropDuplicates(["batch_id", "token"])
-        .filter(F.col("token").isNull())
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("sum_dl").cast("long").alias("sum_dl"),
-        )
+    stats, dfreq = _lexicon_stats(lexicon, distinct)
+    per_doc = _bm25_per_doc(
+        _bm25_score(_postings_tf(postings, distinct), dfreq, stats, k1, b)
     )
-    dfp = ph.agg(F.count("*").cast("long").alias("df_p"))
-    idf_p_q = (
-        F.round(
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df_p") + F.lit(0.5))
-                / (F.col("df_p") + F.lit(0.5))
-            )
-            * 1e6
-        )
-        .cast("long")
+    # The phrase as one more term for the kernel, under a name the
+    # tokenizer can never produce: tf = the doc's occurrence count,
+    # df = the number of phrase-matching docs (a one-row in-plan
+    # aggregate, broadcast, never collected).
+    phrase = F.lit(_PHRASE_TERM).alias("term")
+    phs = _bm25_score(
+        ph.select(
+            F.col("doc_id").alias("id"),
+            "dl",
+            phrase,
+            F.col("n_occurrences").alias("tf"),
+        ),
+        ph.agg(F.count("*").cast("long").alias("df")).select(phrase, "df"),
+        stats,
+        k1,
+        b,
     )
-    phs = (
-        ph.crossJoin(F.broadcast(stats))
-        .crossJoin(F.broadcast(dfp))
-        .select(
-            "doc_id",
-            "n_occurrences",
-            F.round(
-                (idf_p_q.cast("double") / 1e6)
-                * (F.col("n_occurrences") * F.lit(k1 + 1.0))
-                / (
-                    F.col("n_occurrences")
-                    + F.lit(k1 * (1.0 - b))
-                    + F.lit(k1 * b)
-                    * (F.col("dl") * F.col("n_docs")).cast("double")
-                    / F.col("sum_dl")
-                )
-                * 1e6
-            )
-            .cast("long")
-            .alias("__phrase_q"),
-        )
-    )
-    per_doc = _bm25_terms_per_doc(postings, lexicon, distinct, k1, b)
-    return (
-        phs.join(per_doc, phs["doc_id"] == per_doc["id"])
-        .select(
-            F.col("doc_id").alias(id_col),
-            "n_occurrences",
+    return _bm25_topk_tail(
+        phs.join(per_doc, "id").select(
+            "id",
+            F.col("tf").alias("n_occurrences"),
             (
-                (
-                    F.col("__sum_q")
-                    + F.lit(int(phrase_weight)) * F.col("__phrase_q")
-                ).cast("double")
-                / 1e6
-            ).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
+                F.col("__sum_q")
+                + F.lit(int(phrase_weight)) * F.col("__score_q")
+            ).alias("__sum_q"),
+        ),
+        k, id_col, "n_occurrences",
     )
 
 
@@ -2874,21 +2685,16 @@ def proximity_bm25_topk_from_postings(
     boost_q = cached_expr(
         "CAST(1000000 AS BIGINT) DIV (CAST(min_span AS BIGINT) + 1)"
     )
-    return (
-        spans.join(per_doc, spans["doc_id"] == per_doc["id"])
-        .select(
-            F.col("doc_id").alias(id_col),
+    return _bm25_topk_tail(
+        spans.join(per_doc, spans["doc_id"] == per_doc["id"]).select(
+            "id",
             "min_span",
             "n_matched",
             (
-                (
-                    F.col("__sum_q") + F.lit(int(prox_weight)) * boost_q
-                ).cast("double")
-                / 1e6
-            ).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
+                F.col("__sum_q") + F.lit(int(prox_weight)) * boost_q
+            ).alias("__sum_q"),
+        ),
+        k, id_col, "min_span", "n_matched",
     )
 
 
@@ -2898,43 +2704,17 @@ def _bm25_terms_per_doc(
     terms: list[str],
     k1: float,
     b: float,
+    only_ids: DataFrame | None = None,
 ) -> DataFrame:
     """Per-doc quantized BM25 partials (id, n_terms, __sum_q) over the
-    given terms, from postings + lexicon state — the
-    :func:`bm25_topk_from_postings` aggregation without the top-k
-    tail, shared by the phrase/proximity BM25 compositions."""
-    stats = (
-        lexicon.dropDuplicates(["batch_id", "token"])
-        .filter(F.col("token").isNull())
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("sum_dl").cast("long").alias("sum_dl"),
-        )
-    )
-    dfreq = (
-        lexicon.filter(F.col("token").isin(*terms))
-        .dropDuplicates(["batch_id", "token"])
-        .groupBy(F.col("token").alias("term"))
-        .agg(F.sum("df").cast("long").alias("df"))
-    )
-    tf = (
-        postings.filter(F.col("token").isin(*terms))
-        .dropDuplicates(["batch_id", "token", "doc_id"])
-        .select(
-            F.col("doc_id").alias("id"),
-            F.col("dl"),
-            F.col("token").alias("term"),
-            F.col("tf"),
-        )
-    )
-    return (
-        _bm25_postings_score(tf, dfreq, stats, k1, b)
-        .groupBy("id")
-        .agg(
-            F.count("*").cast("long").alias("n_terms"),
-            F.sum("__score_q").cast("long").alias("__sum_q"),
-        )
-    )
+    given terms, from postings + lexicon state. ``only_ids`` (an
+    ``id`` frame) restricts the postings to those docs by a broadcast
+    left-semi join before scoring — WAND's pass-2 candidate filter."""
+    stats, dfreq = _lexicon_stats(lexicon, terms)
+    tf = _postings_tf(postings, terms)
+    if only_ids is not None:
+        tf = tf.join(F.broadcast(only_ids), on="id", how="left_semi")
+    return _bm25_per_doc(_bm25_score(tf, dfreq, stats, k1, b))
 
 
 def winnowing_fingerprints(

@@ -2943,8 +2943,9 @@ _Q126_SQL = _q126_sql()
 # q178: the q126 BM25 machinery over the STREAMED landed corpus (quality
 # gate off -> min doc_id per md5-normalized-text fingerprint, the q163
 # exact-dedup convention), top-12. The Spark side reads N/sum_dl/df from
-# the incremental lexicon state; those are integer partial sums of the
-# identical one-shot quantities, so the SQL can aggregate one-shot.
+# the incremental lexicon state and per-doc tf/dl from the postings
+# state; those are integer partials of the identical one-shot
+# quantities, so the SQL can aggregate one-shot.
 def _q178_sql(
     limit: int = 12, terms_tuple: tuple[str, ...] | None = None
 ) -> str:

@@ -143,11 +143,10 @@ DEFAULT_CONFIG: dict[str, Any] = {
                # threshold (default 8 x n_buckets data files).
                "ingest_components_auto_compact_files": None,
                "ingest_track_drift": False, "ingest_maintain_vocab": False,
-               # Incremental retrieval states (lexicon for BM25 global
-               # stats and WAND impact bounds; postings for zero-
-               # corpus-read term/boolean/phrase queries — positions
-               # selects the positional layout phrase retrieval needs).
-               "ingest_maintain_lexicon": False,
+               # Incremental retrieval state: postings for zero-
+               # corpus-read term/boolean/phrase queries plus the
+               # lexicon (BM25 global stats and WAND impact bounds) —
+               # positions selects the layout phrase retrieval needs.
                "ingest_maintain_postings": False,
                "ingest_postings_n_buckets": None,
                "ingest_postings_positions": False,
@@ -635,7 +634,6 @@ class PipelineOrchestrator:
             apply_quality=rules is not None,
             track_drift=c.get("ingest_track_drift", False),
             maintain_vocab=c.get("ingest_maintain_vocab", False),
-            maintain_lexicon=c.get("ingest_maintain_lexicon", False),
             maintain_postings=c.get("ingest_maintain_postings", False),
             postings_n_buckets=c.get("ingest_postings_n_buckets"),
             postings_positions=c.get(

@@ -224,6 +224,19 @@ def _request_table(rows: list[list[float]],
     return pa.Table.from_arrays(columns, names=list(feature_names))
 
 
+def http_status(exc: Exception, what: str) -> tuple[int, str]:
+    """The (status, detail) an HTTP route answers for an exception a
+    :class:`ServingService` call raised: an unknown job or model
+    (``KeyError``) is a 404 naming ``what``; a request the service
+    refuses (``ValueError``, e.g. a non-finite or wrong-width row) is
+    a 422 carrying its message. Anything else is re-raised (a 500)."""
+    if isinstance(exc, KeyError):
+        return 404, f"unknown {what}"
+    if isinstance(exc, ValueError):
+        return 422, str(exc)
+    raise exc
+
+
 def build_app(service: ServingService | None = None):
     """FastAPI app with the reference's routes; import-gated because
     fastapi is an optional dependency here."""
@@ -254,12 +267,15 @@ def build_app(service: ServingService | None = None):
     def jobs():
         return service.list_jobs()
 
+    def _call(what: str, fn, *args):
+        try:
+            return fn(*args)
+        except (KeyError, ValueError) as exc:
+            raise HTTPException(*http_status(exc, what)) from exc
+
     @app.get("/jobs/{job_id}")
     def job(job_id: str):
-        try:
-            return service.job_status(job_id)
-        except KeyError:
-            raise HTTPException(404, "unknown job")
+        return _call("job", service.job_status, job_id)
 
     @app.get("/models")
     def models():
@@ -271,10 +287,9 @@ def build_app(service: ServingService | None = None):
 
     @app.delete("/models/{model_path}")
     def delete_model(model_path: str):
-        try:
-            return service.delete_model(model_path)
-        except KeyError:
-            raise HTTPException(404, f"unknown model: {model_path!r}")
+        return _call(
+            f"model: {model_path!r}", service.delete_model, model_path
+        )
 
     def _require(body: dict, *keys: str) -> list:
         """Missing request-body keys are a 422 (malformed request), not
@@ -290,12 +305,10 @@ def build_app(service: ServingService | None = None):
         model, features, feature_names = _require(
             body, "model", "features", "feature_names"
         )
-        try:
-            preds = service.predict_rows(model, features, feature_names)
-        except KeyError:
-            raise HTTPException(404, f"unknown model: {model!r}")
-        except ValueError as exc:
-            raise HTTPException(422, str(exc))
+        preds = _call(
+            f"model: {model!r}", service.predict_rows,
+            model, features, feature_names,
+        )
         return {"predictions": preds}
 
     @app.post("/predict/batch")
@@ -303,9 +316,9 @@ def build_app(service: ServingService | None = None):
         model, input_path, output_path = _require(
             body, "model", "input_path", "output_path"
         )
-        try:
-            return service.predict_batch(model, input_path, output_path)
-        except KeyError:
-            raise HTTPException(404, f"unknown model: {model!r}")
+        return _call(
+            f"model: {model!r}", service.predict_batch,
+            model, input_path, output_path,
+        )
 
     return app

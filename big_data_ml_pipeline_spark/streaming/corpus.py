@@ -438,7 +438,6 @@ def ingest_documents_stream(
     compact_every: int | None = None,
     track_drift: bool = False,
     maintain_vocab: bool = False,
-    maintain_lexicon: bool = False,
     maintain_postings: bool = False,
     postings_n_buckets: int | None = None,
     postings_positions: bool = False,
@@ -569,42 +568,41 @@ def ingest_documents_stream(
     accepted observability gap, never a correctness one (dedup state
     is the corpus itself, not the vocab).
 
-    With ``maintain_lexicon=True`` (VERDICT r13 item 4), each batch
-    also appends BM25-grade retrieval statistics to
-    ``{out_dir}_lexicon``: per surviving token (batch_id, token, df,
-    cnt, 0, 0) — df the number of landed docs containing the token —
-    plus one (batch_id, NULL, 0, 0, n_docs, sum_dl) row, all integer
-    partials mergeable by SUM. :func:`~..operators.text.
-    bm25_topk_from_lexicon` then answers lexical queries with NO
-    corpus-wide aggregate: N, Σdl and per-term df come from this
-    vocab-sized table and equal the one-shot batch statistics exactly
-    (integer sums are order-free). Crash-safe by ordering + layout:
-    the lexicon is appended BEFORE the corpus (a crash between the
-    two replays the batch, whose survivors re-derive byte-identical
-    partials — removed by the (batch_id, token) dedup on read), and a
-    replay AFTER the corpus landed finds zero survivors and appends
-    nothing.
+    With ``maintain_postings=True``, each batch appends BM25-grade
+    retrieval state from ONE tokenization pass of its survivors, so
+    the two tables cannot disagree:
 
-    With ``maintain_postings=True`` (VERDICT r14 item 1, requires
-    ``maintain_lexicon=True``), each batch ALSO appends the full
-    INVERTED POSTINGS rows to ``{out_dir}_postings``: one
-    (batch_id, token, doc_id, tf, dl) row per surviving (doc, token)
-    pair — derived from the SAME tokenization pass that feeds the
-    lexicon, so the two tables cannot disagree. :func:`~..operators.
-    text.bm25_topk_from_postings` then answers the BM25 query with NO
-    read of the landed corpus at all: global stats from the lexicon,
-    per-doc (tf, dl) from the postings filtered to the query terms —
-    a term-bounded read. With ``postings_n_buckets=B`` the postings
-    live in an external BUCKETED table on ``token`` (the gram-index
-    lever): query-time `token IN (...)` prunes to the matching
-    buckets, so a q-term lookup touches B_hit/B of the files and the
-    read cost tracks the TERM's posting list, not the corpus — the
-    100 TB shape for lexical retrieval. Crash-safety is the lexicon's
-    argument verbatim (appended before the corpus; replay partials
-    byte-identical, deduped on read by (batch_id, token, doc_id)).
-    The ``compact_every`` cadence folds the postings too
-    (:func:`compact_postings` — one file per bucket, layout
-    preserved), so query-time file counts stay flat at ingest cadence.
+    - ``{out_dir}_postings``: the full INVERTED POSTINGS, one
+      (batch_id, token, doc_id, tf, dl) row per surviving (doc, token)
+      pair (plus the token's ascending offsets with
+      ``postings_positions=True``, the phrase/proximity layout);
+    - ``{out_dir}_lexicon``: per surviving token (batch_id, token, df,
+      cnt, 0, 0, max_tf, min_dl) — df the number of landed docs
+      containing the token, max_tf/min_dl the WAND impact partials —
+      plus one (batch_id, NULL, 0, 0, n_docs, sum_dl, 0, 0) row, all
+      integer partials mergeable by SUM/MAX/MIN.
+
+    :func:`~..operators.text.bm25_topk_from_postings` then answers the
+    BM25 query with NO read of the landed corpus: N, Σdl and per-term
+    df from the vocab-sized lexicon (equal to the one-shot batch
+    statistics exactly — integer sums are order-free), per-doc (tf,
+    dl) from the postings filtered to the query terms. With
+    ``postings_n_buckets=B`` the postings live in an external BUCKETED
+    table on ``token`` (the gram-index lever): query-time
+    `token IN (...)` prunes to the matching buckets, so a q-term
+    lookup touches B_hit/B of the files and the read cost tracks the
+    TERM's posting list, not the corpus. Crash-safe by ordering +
+    layout: postings, then lexicon, are appended BEFORE the corpus (a
+    crash in between replays the batch, whose survivors re-derive
+    byte-identical rows — removed on read by the (batch_id, token,
+    doc_id) and (batch_id, token) dedups), and a replay AFTER the
+    corpus landed finds zero survivors and appends nothing. The
+    ``compact_every`` cadence folds both tables
+    (:func:`compact_postings` keeps one file per bucket), so
+    query-time file counts stay flat at ingest cadence. Reopening a
+    state whose lexicon predates the impact partials, or that holds a
+    lexicon but no postings, or whose postings layout differs from
+    ``postings_positions``, raises ``ValueError``.
 
     With ``lm_floor`` set (requires ``maintain_vocab=True``), each
     batch is ALSO gated by the corpus's own incremental language
@@ -756,13 +754,9 @@ def ingest_documents_stream(
     else:
         mh_tbl = None
 
-    if maintain_postings and not maintain_lexicon:
-        raise ValueError(
-            "maintain_postings requires maintain_lexicon (global BM25 "
-            "stats come from the lexicon state)"
-        )
     lexicon_dir = out_dir.rstrip("/") + "_lexicon"
-    if maintain_lexicon and _has_parquet(lexicon_dir):
+    postings_dir = out_dir.rstrip("/") + "_postings"
+    if maintain_postings and _has_parquet(lexicon_dir):
         # Same refuse-a-silent-mix rule as the positional postings
         # guard below (ADVICE r16 medium): a lexicon built before the
         # (max_tf, min_dl) impact columns existed would union into a
@@ -782,7 +776,17 @@ def ingest_documents_stream(
                 "schemas and make WAND pruning unsafe — rebuild the "
                 "state (re-ingest) before appending"
             )
-    postings_dir = out_dir.rstrip("/") + "_postings"
+        # A lexicon with no postings was built lexicon-only (an older
+        # ingest mode; postings are written before the lexicon, so a
+        # crash cannot leave this): its early docs would count in N
+        # and df but have no postings rows, and postings BM25 would
+        # silently miss them.
+        if not _has_parquet(postings_dir):
+            raise ValueError(
+                f"lexicon state at {lexicon_dir} has no postings at "
+                f"{postings_dir}; its docs would be missing from "
+                "postings queries — rebuild the state (re-ingest)"
+            )
     pg_buckets = int(postings_n_buckets or 0) if maintain_postings else 0
     if maintain_postings and _has_parquet(postings_dir):
         # Positional and positionless postings are DIFFERENT layouts —
@@ -1049,7 +1053,7 @@ def ingest_documents_stream(
                     compact_every=compact_every,
                     auto_compact_files=components_auto_compact_files,
                 )
-            if maintain_lexicon and survivors.head(1):
+            if maintain_postings and survivors.head(1):
                 # BEFORE the corpus append (see docstring: a replay
                 # after the corpus landed has zero survivors and must
                 # append nothing; a replay before it re-derives these
@@ -1095,33 +1099,28 @@ def ingest_documents_stream(
                         .groupBy("__lid", "__dl", "token")
                         .agg(F.count("*").cast("long").alias("__tf"))
                     )
-                if maintain_postings:
-                    # Full inverted postings from the SAME per_tok pass
-                    # (one row per surviving (doc, token)); dl rides
-                    # along so query time never rejoins the corpus.
-                    postings = per_tok.select(
-                        F.lit(int(batch_id)).cast("long").alias(
-                            "batch_id"
-                        ),
-                        "token",
-                        F.col("__lid").alias("doc_id"),
-                        F.col("__tf").alias("tf"),
-                        F.col("__dl").alias("dl"),
-                        *(
-                            [F.col("__positions").alias("positions")]
-                            if postings_positions
-                            else []
-                        ),
+                # Full inverted postings from the SAME per_tok pass
+                # (one row per surviving (doc, token)); dl rides
+                # along so query time never rejoins the corpus.
+                postings = per_tok.select(
+                    F.lit(int(batch_id)).cast("long").alias("batch_id"),
+                    "token",
+                    F.col("__lid").alias("doc_id"),
+                    F.col("__tf").alias("tf"),
+                    F.col("__dl").alias("dl"),
+                    *(
+                        [F.col("__positions").alias("positions")]
+                        if postings_positions
+                        else []
+                    ),
+                )
+                if pg_tbl is not None:
+                    _append_bucketed(
+                        postings, pg_tbl, pg_buckets, ["token"],
+                        sort_cols=["token"],
                     )
-                    if pg_tbl is not None:
-                        _append_bucketed(
-                            postings, pg_tbl, pg_buckets, ["token"],
-                            sort_cols=["token"],
-                        )
-                    else:
-                        postings.write.mode("append").parquet(
-                            postings_dir
-                        )
+                else:
+                    postings.write.mode("append").parquet(postings_dir)
                 # max_tf / min_dl are the per-term IMPACT partials the
                 # WAND/MaxScore pruned BM25 needs (Turtle & Flood 1995;
                 # Broder 2003): the BM25 tf-component is increasing in
@@ -1157,7 +1156,7 @@ def ingest_documents_stream(
                 )
                 token_rows.unionByName(doc_row).write.mode(
                     "append"
-                ).parquet(out_dir.rstrip("/") + "_lexicon")
+                ).parquet(lexicon_dir)
             # 5: corpus first, index second (see docstring).
             survivors.write.mode("append").parquet(out_dir)
             if maintain_vocab:
@@ -1312,18 +1311,12 @@ def ingest_documents_stream(
             ):
                 compact_vocab(spark, vocab_dir)
             if (
-                maintain_lexicon
-                and compact_every
-                and (batch_id + 1) % compact_every == 0
-                and os.path.exists(out_dir.rstrip("/") + "_lexicon")
-            ):
-                compact_lexicon(spark, out_dir.rstrip("/") + "_lexicon")
-            if (
                 maintain_postings
                 and compact_every
                 and (batch_id + 1) % compact_every == 0
                 and _has_parquet(postings_dir)
             ):
+                compact_lexicon(spark, lexicon_dir)
                 compact_postings(
                     spark, postings_dir, n_buckets=pg_buckets or None
                 )

@@ -184,6 +184,23 @@ def test_serving_predict_rows_validates_request(spark, data_path):
             svc.predict_rows(name, [[1.0, 2.0], [9.0, 3.0], bad], names)
 
 
+def test_http_status_mapping():
+    """The routes' one exception -> (status, detail) mapping, checked
+    without fastapi: unknown job/model is a 404 naming it, a refused
+    request a 422 with the service's message, anything else a 500."""
+    from big_data_ml_pipeline_spark.serving import http_status
+
+    assert http_status(KeyError("m1"), "model: 'm1'") == (
+        404, "unknown model: 'm1'"
+    )
+    assert http_status(KeyError("j1"), "job") == (404, "unknown job")
+    assert http_status(
+        ValueError("row 2: feature values must be finite"), "model: 'm1'"
+    ) == (422, "row 2: feature values must be finite")
+    with pytest.raises(RuntimeError, match="boom"):
+        http_status(RuntimeError("boom"), "model: 'm1'")
+
+
 def test_serving_predict_rows_concurrent(spark, data_path):
     """Concurrent handlers share one resolved JVM pipeline: more
     threads than cores, with a short switch interval, each get the
@@ -1565,8 +1582,8 @@ def test_maintain_on_drift_policy(spark, tmp_path, monkeypatch):
 
 def test_orchestrator_ingest_corpus_retrieval_states(spark, tmp_path):
     """The config surface reaches the retrieval states (round-16 gap):
-    corpus.ingest_maintain_lexicon/postings (+ bucket count +
-    positions) thread through ingest_corpus_stream, and the landed
+    corpus.ingest_maintain_postings (+ bucket count + positions)
+    threads through ingest_corpus_stream, and the landed
     states answer the postings BM25, the WAND-pruned BM25 (impact
     columns present) and the positional phrase query."""
     import os
@@ -1596,7 +1613,6 @@ def test_orchestrator_ingest_corpus_retrieval_states(spark, tmp_path):
         os.utime(p, (time.time() + i, time.time() + i))
     cfg = {"corpus": {"ingest_quality_rules": None,
                       "ingest_near_dup_threshold": None,
-                      "ingest_maintain_lexicon": True,
                       "ingest_maintain_postings": True,
                       "ingest_postings_n_buckets": 4,
                       "ingest_postings_positions": True}}

@@ -2754,81 +2754,6 @@ def test_streaming_components_feed_leakage_safe_split(spark, tmp_path):
     assert [(a, b) for a, b in edges if (a in tr) != (b in tr)] == []
 
 
-def test_streaming_lexicon_bm25_equals_batch(spark, tmp_path):
-    """maintain_lexicon (VERDICT r13 item 4): BM25 answered from the
-    incremental lexicon state equals bm25_topk's one-shot corpus
-    aggregation on the same landed corpus, row for row — df/N/Σdl are
-    integer partial sums of exactly the batch quantities, so every
-    downstream quantized expression is bit-identical. Also pins:
-    dropped duplicates contribute NO statistics, compaction preserves
-    the sums, and a fresh-checkpoint replay appends nothing (zero
-    survivors per batch)."""
-    import os
-    import time
-
-    from big_data_ml_pipeline_spark.operators.text import (
-        bm25_topk,
-        bm25_topk_from_lexicon,
-    )
-    from big_data_ml_pipeline_spark.streaming import corpus as corpus_ops
-
-    shards = [
-        [(0, "spark window vector spark"), (1, "window beta vector")],
-        [(2, "spark window vector spark"),  # exact dup of 0 -> dropped
-         (3, "vector vector gamma window spark")],
-        [(4, "delta epsilon spark"), (5, "window window vector")],
-    ]
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    for i, rows in enumerate(shards):
-        p = str(in_dir / f"s{i}.parquet")
-        spark.createDataFrame(
-            [(d, t, "en") for d, t in rows], ["doc_id", "text", "lang"]
-        ).toPandas().to_parquet(p, index=False)
-        os.utime(p, (time.time() + i, time.time() + i))
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    corpus_ops.ingest_documents_stream(
-        corpus_ops.read_documents_stream(spark, str(in_dir)),
-        out, ckpt, apply_quality=False,
-        maintain_lexicon=True, compact_every=2,
-    )
-    landed = spark.read.parquet(out)
-    assert landed.count() == 5  # doc 2 deduped
-    lexicon = spark.read.parquet(out + "_lexicon")
-    terms = ("spark", "window", "vector")
-    inc = bm25_topk_from_lexicon(
-        landed, lexicon, terms, k=10, k1=1.2, b=0.75
-    ).collect()
-    bat = bm25_topk(landed, terms, k=10, k1=1.2, b=0.75).collect()
-    assert [tuple(r) for r in inc] == [tuple(r) for r in bat]
-    assert len(inc) == 5 and inc[0]["score"] > 0
-    # The dropped duplicate contributed nothing: stats equal the
-    # landed corpus exactly.
-    from pyspark.sql import functions as SF
-
-    lex = lexicon.dropDuplicates(["batch_id", "token"])
-    st = lex.filter(SF.col("token").isNull()).agg(
-        SF.sum("n_docs").alias("n"), SF.sum("sum_dl").alias("s")
-    ).collect()[0]
-    assert st["n"] == 5
-    assert st["s"] == sum(
-        len(t.split()) for d, t in sum(shards, []) if d != 2
-    )
-    # Fresh-checkpoint replay: every batch's survivors are already
-    # landed -> zero new lexicon rows, stats unchanged.
-    n_rows = lexicon.count()
-    corpus_ops.ingest_documents_stream(
-        corpus_ops.read_documents_stream(spark, str(in_dir)),
-        out, str(tmp_path / "ckpt2"), apply_quality=False,
-        maintain_lexicon=True,
-    )
-    assert spark.read.parquet(out + "_lexicon").count() == n_rows
-    inc2 = bm25_topk_from_lexicon(
-        landed, spark.read.parquet(out + "_lexicon"), terms, k=10
-    ).collect()
-    assert [tuple(r) for r in inc2] == [tuple(r) for r in bat]
-
-
 def test_streaming_postings_bm25_zero_corpus_reads(spark, tmp_path):
     """maintain_postings (VERDICT r14 item 1): BM25 answered ENTIRELY
     from ingest state — bm25_topk_from_postings over the bucketed
@@ -2836,9 +2761,10 @@ def test_streaming_postings_bm25_zero_corpus_reads(spark, tmp_path):
     aggregation row for row, its physical plan scans NO corpus file
     (only the postings/lexicon state), the token IN-filter is pushed
     to the postings scan, and the bucketed-on-token table prunes to
-    the query terms' buckets. Also pins replay idempotency (a
-    fresh-checkpoint replay appends nothing) and the
-    maintain_postings-without-lexicon ValueError."""
+    the query terms' buckets. Also pins: the lexicon's N/Σdl equal the
+    landed corpus (a dropped duplicate contributes NO statistics) and
+    survive the in-stream compaction fold, and a fresh-checkpoint
+    replay appends no postings and no lexicon rows."""
     import os
     import time
 
@@ -2865,19 +2791,27 @@ def test_streaming_postings_bm25_zero_corpus_reads(spark, tmp_path):
         ).toPandas().to_parquet(p, index=False)
         os.utime(p, (time.time() + i, time.time() + i))
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    with _pytest.raises(ValueError, match="maintain_lexicon"):
-        corpus_ops.ingest_documents_stream(
-            corpus_ops.read_documents_stream(spark, str(in_dir)),
-            out, ckpt, apply_quality=False, maintain_postings=True,
-        )
     corpus_ops.ingest_documents_stream(
         corpus_ops.read_documents_stream(spark, str(in_dir)),
         out, ckpt, apply_quality=False,
-        maintain_lexicon=True, maintain_postings=True,
-        postings_n_buckets=4,
+        maintain_postings=True, postings_n_buckets=4, compact_every=2,
     )
     landed = spark.read.parquet(out)
-    assert landed.count() == 5
+    assert landed.count() == 5  # doc 2 deduped
+    # The in-stream fold ran (batch 1 closed a compact_every=2 window)
+    # and the summed stats equal the landed corpus exactly: the
+    # dropped duplicate contributed nothing.
+    from pyspark.sql import functions as SF
+
+    lexicon = spark.read.parquet(out + "_lexicon")
+    assert lexicon.filter(SF.col("batch_id") == -1).count() > 0
+    st = lexicon.dropDuplicates(["batch_id", "token"]).filter(
+        SF.col("token").isNull()
+    ).agg(SF.sum("n_docs").alias("n"), SF.sum("sum_dl").alias("s")).collect()[0]
+    assert st["n"] == 5
+    assert st["s"] == sum(
+        len(t.split()) for d, t in sum(shards, []) if d != 2
+    )
     terms = ("spark", "window", "vector")
     postings = corpus_ops.read_postings(spark, out)
     result = bm25_topk_from_postings(
@@ -2902,14 +2836,16 @@ def test_streaming_postings_bm25_zero_corpus_reads(spark, tmp_path):
         len(set(t.split())) for d, t in sum(shards, []) if d != 2
     )
     assert postings.count() == n_pairs
-    # Fresh-checkpoint replay: zero survivors -> zero new postings.
+    # Fresh-checkpoint replay: zero survivors -> zero new postings and
+    # zero new lexicon rows.
+    n_lex = lexicon.count()
     corpus_ops.ingest_documents_stream(
         corpus_ops.read_documents_stream(spark, str(in_dir)),
         out, str(tmp_path / "ckpt2"), apply_quality=False,
-        maintain_lexicon=True, maintain_postings=True,
-        postings_n_buckets=4,
+        maintain_postings=True, postings_n_buckets=4,
     )
     assert corpus_ops.read_postings(spark, out).count() == n_pairs
+    assert spark.read.parquet(out + "_lexicon").count() == n_lex
     # Compaction folds the per-batch appends to one file per bucket,
     # preserves the layout, and changes neither counts nor the query.
     corpus_ops.compact_postings(spark, out + "_postings", n_buckets=4)
@@ -2928,8 +2864,7 @@ def test_streaming_postings_bm25_zero_corpus_reads(spark, tmp_path):
         corpus_ops.ingest_documents_stream(
             corpus_ops.read_documents_stream(spark, str(in_dir)),
             out, str(tmp_path / "ckpt3"), apply_quality=False,
-            maintain_lexicon=True, maintain_postings=True,
-            postings_n_buckets=8,
+            maintain_postings=True, postings_n_buckets=8,
         )
 
 
@@ -2977,7 +2912,7 @@ def test_bm25_wand_pruned_equals_unpruned(spark, tmp_path, monkeypatch):
     corpus_ops.ingest_documents_stream(
         corpus_ops.read_documents_stream(spark, str(in_dir)),
         out, ckpt, apply_quality=False,
-        maintain_lexicon=True, maintain_postings=True,
+        maintain_postings=True,
         postings_n_buckets=4,
     )
     postings = corpus_ops.read_postings(spark, out)
@@ -3086,7 +3021,7 @@ def test_bm25_wand_pass2_candidate_bound(spark, tmp_path):
     corpus_ops.ingest_documents_stream(
         corpus_ops.read_documents_stream(spark, str(in_dir)),
         out, ckpt, apply_quality=False,
-        maintain_lexicon=True, maintain_postings=True,
+        maintain_postings=True,
         postings_n_buckets=4,
     )
     postings = corpus_ops.read_postings(spark, out)
@@ -3156,7 +3091,10 @@ def test_lexicon_impact_schema_append_guard(spark, tmp_path):
     """Appending to a lexicon state that predates the (max_tf, min_dl)
     impact columns REFUSES instead of silently creating a mixed-schema
     dir whose old batches read as NULL partials (ADVICE r16 medium —
-    the postings positional-layout guard, mirrored)."""
+    the postings positional-layout guard, mirrored). So does reopening
+    a lexicon-only state (an older ingest mode) with postings on: its
+    early docs would count in N/df but have no postings rows, and
+    postings BM25 would silently miss them."""
     import os
     import time
 
@@ -3182,10 +3120,25 @@ def test_lexicon_impact_schema_append_guard(spark, tmp_path):
         corpus_ops.ingest_documents_stream(
             corpus_ops.read_documents_stream(spark, str(in_dir)),
             out, str(tmp_path / "ckpt"), apply_quality=False,
-            maintain_lexicon=True,
+            maintain_postings=True,
         )
     # The refused ingest must not have landed anything.
     assert not os.path.exists(out)
+    # A lexicon-only state: impact-era schema, no postings dir.
+    out2 = str(tmp_path / "out2")
+    spark.createDataFrame(
+        [(0, "alpha", 1, 1, 0, 0, 1, 2), (0, None, 0, 0, 1, 2, 0, 0)],
+        "batch_id long, token string, df long, cnt long, "
+        "n_docs long, sum_dl long, max_tf long, min_dl long",
+    ).write.parquet(out2 + "_lexicon")
+    with _pytest.raises(ValueError, match="has no postings"):
+        corpus_ops.ingest_documents_stream(
+            corpus_ops.read_documents_stream(spark, str(in_dir)),
+            out2, str(tmp_path / "ckpt2"), apply_quality=False,
+            maintain_postings=True,
+        )
+    assert not os.path.exists(out2)
+    assert not os.path.exists(out2 + "_postings")
 
 
 def test_positional_postings_phrase_retrieval(spark, tmp_path):
@@ -3229,7 +3182,7 @@ def test_positional_postings_phrase_retrieval(spark, tmp_path):
     corpus_ops.ingest_documents_stream(
         corpus_ops.read_documents_stream(spark, str(in_dir)),
         out, ckpt, apply_quality=False,
-        maintain_lexicon=True, maintain_postings=True,
+        maintain_postings=True,
         postings_n_buckets=4, postings_positions=True,
     )
     postings = corpus_ops.read_postings(spark, out)
@@ -3296,7 +3249,7 @@ def test_positional_postings_phrase_retrieval(spark, tmp_path):
     corpus_ops.ingest_documents_stream(
         corpus_ops.read_documents_stream(spark, str(in_dir)),
         out, str(tmp_path / "ckpt2"), apply_quality=False,
-        maintain_lexicon=True, maintain_postings=True,
+        maintain_postings=True,
         postings_n_buckets=4, postings_positions=True,
     )
     assert corpus_ops.read_postings(spark, out).count() == len(want_pos)
@@ -3306,21 +3259,21 @@ def test_positional_postings_phrase_retrieval(spark, tmp_path):
         corpus_ops.ingest_documents_stream(
             corpus_ops.read_documents_stream(spark, str(in_dir)),
             out, str(tmp_path / "ckpt3"), apply_quality=False,
-            maintain_lexicon=True, maintain_postings=True,
+            maintain_postings=True,
             postings_n_buckets=4,
         )
     out2 = str(tmp_path / "out2")
     corpus_ops.ingest_documents_stream(
         corpus_ops.read_documents_stream(spark, str(in_dir)),
         out2, str(tmp_path / "ckpt4"), apply_quality=False,
-        maintain_lexicon=True, maintain_postings=True,
+        maintain_postings=True,
         postings_n_buckets=4,
     )
     with _pytest.raises(ValueError, match="WITHOUT positions"):
         corpus_ops.ingest_documents_stream(
             corpus_ops.read_documents_stream(spark, str(in_dir)),
             out2, str(tmp_path / "ckpt5"), apply_quality=False,
-            maintain_lexicon=True, maintain_postings=True,
+            maintain_postings=True,
             postings_n_buckets=4, postings_positions=True,
         )
     with _pytest.raises(ValueError, match="POSITIONAL"):
@@ -3376,7 +3329,7 @@ def test_phrase_and_proximity_bm25_ranking(spark, tmp_path):
     corpus_ops.ingest_documents_stream(
         corpus_ops.read_documents_stream(spark, str(in_dir)),
         out, str(tmp_path / "ck"), apply_quality=False,
-        maintain_lexicon=True, maintain_postings=True,
+        maintain_postings=True,
         postings_n_buckets=4, postings_positions=True,
     )
     postings = corpus_ops.read_postings(spark, out)
@@ -3542,7 +3495,7 @@ def test_proximity_minimal_span_vs_bruteforce(spark, tmp_path):
     corpus_ops.ingest_documents_stream(
         corpus_ops.read_documents_stream(spark, str(in_dir)),
         out, str(tmp_path / "ck"), apply_quality=False,
-        maintain_lexicon=True, maintain_postings=True,
+        maintain_postings=True,
         postings_n_buckets=4, postings_positions=True,
     )
     postings = corpus_ops.read_postings(spark, out)
@@ -3651,7 +3604,7 @@ def test_merge_ingest_states_equals_fresh_ingest(spark, tmp_path):
         corpus_ops.ingest_documents_stream(
             corpus_ops.read_documents_stream(spark, in_dir),
             out, out + "_ck", apply_quality=False,
-            maintain_lexicon=True, maintain_postings=True,
+            maintain_postings=True,
             maintain_vocab=True,
             postings_n_buckets=4, postings_positions=True,
         )
@@ -3718,7 +3671,7 @@ def test_merge_ingest_states_equals_fresh_ingest(spark, tmp_path):
     corpus_ops.ingest_documents_stream(
         corpus_ops.read_documents_stream(spark, str(more)),
         dest, dest + "_ck2", apply_quality=False,
-        maintain_lexicon=True, maintain_postings=True,
+        maintain_postings=True,
         maintain_vocab=True,
         postings_n_buckets=4, postings_positions=True,
     )
