@@ -1050,9 +1050,20 @@ def connected_components_alternating(
     test). Per-round cost is O(|E|) shuffled bytes; ``localCheckpoint``
     truncates the iterative lineage exactly as in
     :func:`connected_components`.
+
+    Convergence is tested on the edge set itself: oriented from the
+    larger id to the smaller, it is the fixed point exactly when it is
+    a star forest — no node is both a child and a parent, and no child
+    has two parents (one more round would map it to itself). That is
+    one aggregation job, run on the input (an empty edge set, or one
+    of disjoint pairs — the common micro-batch — needs no round) and
+    on each round's output, so the loop stops on the round that
+    produced the stars rather than re-deriving them to compare.
     """
     edges = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+        pairs.select(
+            F.greatest(id_a, id_b).alias("u"), F.least(id_a, id_b).alias("v")
+        )
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint()
@@ -1065,15 +1076,34 @@ def connected_components_alternating(
             edges.select(F.col("v").alias("id"), F.col("v").alias("comp")).distinct()
         )
 
-    # An empty edge set (a micro-batch with no duplicate pairs) is
-    # already the fixed point: skip the round's two shuffles and the
-    # convergence check.
-    if edges.isEmpty():
-        if stats is not None:
-            stats["rounds"] = 0
-        return labels(edges)
+    def is_star_forest(edges: DataFrame) -> bool:
+        # Per node: how many parents it has as a child, and whether it
+        # is anyone's parent.
+        roles = (
+            edges.select(
+                F.col("u").alias("n"), F.lit(1).alias("c"), F.lit(0).alias("p")
+            )
+            .unionByName(
+                edges.select(
+                    F.col("v").alias("n"), F.lit(0).alias("c"), F.lit(1).alias("p")
+                )
+            )
+            .groupBy("n")
+            .agg(F.sum("c").alias("c"), F.max("p").alias("p"))
+        )
+        bad = (F.col("c") > 1) | ((F.col("c") > 0) & (F.col("p") > 0))
+        return roles.filter(bad).limit(1).count() == 0
+
     w = Window.partitionBy("u")
-    for rounds in range(1, max_iter + 1):
+    rounds = 0
+    while not is_star_forest(edges):
+        if rounds == max_iter:
+            raise RuntimeError(
+                f"connected_components_alternating did not converge within "
+                f"max_iter={max_iter} rounds — unexpected for any graph with "
+                f"fewer than ~2^{max_iter // 2} nodes; raise max_iter."
+            )
+        rounds += 1
         # Large-star: gather over both directions; m = min(N(u) ∪ {u});
         # emit (v, m) for the strictly-larger neighbours v.
         nbrs = edges.unionByName(
@@ -1091,7 +1121,7 @@ def connected_components_alternating(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
         small = oriented.withColumn("m", F.min("v").over(w))
-        new_edges = (
+        edges = (
             small.select("u", F.col("m").alias("v"))
             .unionByName(
                 small.filter(F.col("v") != F.col("m")).select(
@@ -1101,20 +1131,9 @@ def connected_components_alternating(
             .distinct()
             .localCheckpoint()
         )
-        unchanged = (
-            new_edges.exceptAll(edges).limit(1).count() == 0
-            and edges.exceptAll(new_edges).limit(1).count() == 0
-        )
-        edges = new_edges
-        if unchanged:
-            if stats is not None:
-                stats["rounds"] = rounds
-            return labels(edges)
-    raise RuntimeError(
-        f"connected_components_alternating did not converge within "
-        f"max_iter={max_iter} rounds — unexpected for any graph with "
-        f"fewer than ~2^{max_iter // 2} nodes; raise max_iter."
-    )
+    if stats is not None:
+        stats["rounds"] = rounds
+    return labels(edges)
 
 
 def update_components(

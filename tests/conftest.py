@@ -40,6 +40,17 @@ def spark():
             # it cost ~14% of their wall clock. It only enriches error
             # messages — no test reads it.
             "spark.python.sql.dataFrameDebugging.enabled": "false",
+            # Evaluate plans without generated code. Every plan in the
+            # suite is new to the JVM (micro-batch ids and per-test
+            # paths are literals in it), so with code generation each
+            # job first compiles its stages with Janino; on fixture-
+            # sized inputs that compile is ~20% of the streaming tests'
+            # wall clock and runs longer than the rows it speeds up.
+            # Interpreted and generated evaluation give the same rows
+            # (Spark tests the two against each other);
+            # test_whole_stage_codegen_on_hot_path plans q01 with the
+            # engine's default mode to pin its codegen stages.
+            "spark.sql.codegen.factoryMode": "NO_CODEGEN",
         },
     )
     yield s

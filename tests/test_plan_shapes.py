@@ -134,10 +134,17 @@ def test_whole_stage_codegen_on_hot_path(spark):
     # Execute, then inspect the executed plan (under AQE the codegen
     # spans only appear once the adaptive plan finalizes; the suite
     # session runs AQE-off, where the static executed plan shows them
-    # directly — the codegen claim is the same either way).
-    df = entrymod.queries()["q01_pricing_summary"](spark, SF0001)
-    df.collect()
-    p = df._jdf.queryExecution().executedPlan().toString()
+    # directly — the codegen claim is the same either way). The suite
+    # session plans without code generation (tests/conftest.py); this
+    # test plans q01 under the engine's default codegen mode.
+    mode = spark.conf.get("spark.sql.codegen.factoryMode")
+    spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    try:
+        df = entrymod.queries()["q01_pricing_summary"](spark, SF0001)
+        df.collect()
+        p = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.codegen.factoryMode", mode)
     if "AdaptiveSparkPlan" in p:
         assert "isFinalPlan=true" in p
     # codegen stages print as '*(n) Operator' in the simple plan string
