@@ -3097,11 +3097,30 @@ def _stage_id_shards(
 #: once and the repeated timings isolate the streaming path.
 _PROBE_COUNTS: dict[str, tuple[int, ...]] = {}
 
+#: This process's temp root for the session-shared ingest states below:
+#: made on first use, removed at interpreter exit (the states, like the
+#: caches that point at them, live exactly as long as the process).
+_SESSION_TMP_ROOT: str | None = None
+
+
+def _session_tmp_dir(prefix: str) -> str:
+    """A new dir under this process's temp root (:data:`_SESSION_TMP_ROOT`)."""
+    import atexit
+    import shutil
+    import tempfile
+
+    global _SESSION_TMP_ROOT
+    if _SESSION_TMP_ROOT is None:
+        _SESSION_TMP_ROOT = tempfile.mkdtemp(prefix="spark_graft_session_")
+        atexit.register(shutil.rmtree, _SESSION_TMP_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SESSION_TMP_ROOT)
+
+
 #: q178/q184/q187/q188 share ONE staged postings ingest per input shard
 #: set (and q189/q192-q194 one positional one) — the first probe of a
 #: session pays the ingest, the rest reuse the landed state (the
-#: _stage_id_shards scaffolding precedent). Session-temp; read-only
-#: after build.
+#: _stage_id_shards scaffolding precedent). Under the process's temp
+#: root; read-only after build.
 _POSTINGS_INGEST_CACHE: dict[tuple[str, bool], str] = {}
 
 
@@ -3114,15 +3133,13 @@ def _staged_postings_ingest(
     builds the POSITIONAL layout (a distinct state — q189's phrase
     probe needs offsets; the BM25/boolean probes share the leaner
     positionless one)."""
-    import tempfile
-
     from big_data_ml_pipeline_spark.streaming import corpus as corpus_stream
 
     in_dir = _stage_id_shards(spark, sf_dir, "documents", "doc_id")
     key = (in_dir, bool(positions))
     if key in _POSTINGS_INGEST_CACHE:
         return _POSTINGS_INGEST_CACHE[key]
-    base = tempfile.mkdtemp(prefix="postings_ingest_")
+    base = _session_tmp_dir("postings_ingest_")
     out = os.path.join(base, "out")
     corpus_stream.ingest_documents_stream(
         corpus_stream.read_documents_stream(spark, in_dir),
@@ -3153,14 +3170,13 @@ def _staged_merged_ingest(spark: SparkSession, sf_dir: str) -> str:
     fingerprint rep — so the merged state must answer the q184 BM25
     probe EXACTLY like the one-shot SQL over the full table."""
     import shutil
-    import tempfile
 
     from big_data_ml_pipeline_spark.streaming import corpus as corpus_stream
 
     in_dir = _stage_id_shards(spark, sf_dir, "documents", "doc_id")
     if in_dir in _MERGED_INGEST_CACHE:
         return _MERGED_INGEST_CACHE[in_dir]
-    base = tempfile.mkdtemp(prefix="merged_ingest_")
+    base = _session_tmp_dir("merged_ingest_")
     shards = sorted(
         f for f in os.listdir(in_dir) if f.endswith(".parquet")
     )

@@ -231,16 +231,29 @@ DEFAULT_CONFIG: dict[str, Any] = {
 }
 
 
-def _merge(base: dict, override: dict) -> dict:
+def _merge(base: dict, override: dict, path: str = "") -> dict:
+    """``override`` laid over ``base``, recursing into dict defaults.
+    A key that a non-empty default dict does not name raises
+    ValueError with its dotted path: a misspelt or retired option
+    would otherwise be ignored silently. Options whose default is
+    ``{}`` or None (``model.params``, ``tuning.grid``, ``corpus.pack``,
+    ...) are free-form maps and are taken as given."""
     out = dict(base)
     for k, v in (override or {}).items():
-        out[k] = _merge(base[k], v) if isinstance(v, dict) and isinstance(base.get(k), dict) else v
+        key = f"{path}{k}"
+        if base and k not in base:
+            raise ValueError(f"unknown config key {key!r}")
+        if isinstance(v, dict) and isinstance(base.get(k), dict):
+            out[k] = _merge(base[k], v, key + ".")
+        else:
+            out[k] = v
     return out
 
 
 def load_config(source: str | dict | None) -> dict:
     """YAML path / dict / None → full config with defaults filled in
-    (reference loads YAML at src/ml_pipeline.py:35-38)."""
+    (reference loads YAML at src/ml_pipeline.py:35-38); an unknown key
+    raises ValueError (:func:`_merge`)."""
     if source is None:
         cfg: dict = {}
     elif isinstance(source, dict):

@@ -17,11 +17,30 @@ Fixes the reference's serving anti-patterns:
    optimizer folds the fitted pipeline's expressions into that relation
    (``ConvertToLocalRelation``), so a request is scored on the driver
    with no Spark job; above the threshold Spark itself falls back to a
-   distributed scan. Each registered model's JVM ``PipelineModel`` is
-   resolved once, at registration, so a request makes no per-stage
-   parameter transfer.
+   distributed scan.
  - rows the pipeline would silently drop (the feature assembler skips
    NaN) are rejected up front, so responses stay aligned with requests.
+
+A request's driver CPU goes to planning, not to rows, so two things
+keep that planning small:
+ - **The serving session.** Each service scores requests on one child
+   session of the orchestrator's (``newSession()``: same SparkContext,
+   own SQL conf) with ``spark.sql.codegen.factoryMode=NO_CODEGEN``.
+   Every request re-creates the pipeline's ScalaUDFs, and with code
+   generation each of their encoders would generate, format and
+   compile Java source (15-23% of driver CPU samples in JFR profiles
+   at 1 and 4 clients); interpreted projections skip all of it and
+   cost little on a few rows. The orchestrator's own session is untouched,
+   so training, ``predict_batch`` and every query keep whole-stage
+   codegen.
+ - **The served copy.** Each registered model's JVM ``PipelineModel``
+   is resolved once, at registration, from a copy of the model whose
+   final probabilistic classifier has ``probabilityCol=""``. Its
+   ``prediction`` is ``raw2prediction(rawPrediction)`` either way
+   (thresholds are applied inside that call), so the probability UDF
+   would be built and analysed on every request only to be pruned;
+   answers are identical by construction. ``models`` keeps the caller's model
+   unchanged for ``predict_batch``, which still writes ``probability``.
 """
 
 from __future__ import annotations
@@ -35,7 +54,8 @@ from typing import Any
 import pyarrow as pa
 from py4j.java_gateway import JavaObject
 from pyspark.ml import PipelineModel
-from pyspark.sql import DataFrame
+from pyspark.ml.classification import ProbabilisticClassificationModel
+from pyspark.sql import DataFrame, SparkSession
 
 from .orchestrator import PipelineOrchestrator
 
@@ -48,9 +68,13 @@ class ServingService:
         self.orchestrator = orchestrator or PipelineOrchestrator()
         self.jobs: dict[str, dict[str, Any]] = {}
         self.models: dict[str, PipelineModel] = {}
-        #: The JVM ``PipelineModel`` behind each entry of ``models``,
+        #: The JVM ``PipelineModel`` that serves each entry of
+        #: ``models`` (its served copy, :func:`_served_pipeline`),
         #: resolved once at registration; changed only with ``models``.
         self._jvm_models: dict[str, JavaObject] = {}
+        #: The serving session every request is built on (module
+        #: docstring), made by the first request.
+        self._session: SparkSession | None = None
         self._lock = threading.Lock()
 
     # -- training jobs ------------------------------------------------------
@@ -70,7 +94,7 @@ class ServingService:
             try:
                 df = self.orchestrator.load(data_path)
                 model, metrics = self.orchestrator.train(df, algorithm, task)
-                jvm_model = model._to_java()
+                jvm_model = _served_pipeline(model)
                 with self._lock:
                     self.models[job_id] = model
                     self._jvm_models[job_id] = jvm_model
@@ -98,7 +122,7 @@ class ServingService:
     def register_model(self, name: str, model: PipelineModel | str) -> None:
         if isinstance(model, str):
             model = PipelineModel.load(model)
-        jvm_model = model._to_java()
+        jvm_model = _served_pipeline(model)
         with self._lock:
             self.models[name] = model
             self._jvm_models[name] = jvm_model
@@ -180,11 +204,17 @@ class ServingService:
         Raises KeyError for an unknown model and ValueError, naming the
         row, for a row of the wrong width or with a non-finite or
         missing value. The rows are scored on the driver with no Spark
-        job while they fit a local relation (module docstring); the
-        collect is the serving boundary (reference api/api.py:176-184)."""
+        job while they fit a local relation, by the model's served copy
+        on the codegen-free serving session (module docstring), so a
+        request generates and compiles no code; the collect is the
+        serving boundary (reference api/api.py:176-184)."""
         with self._lock:
             jvm_model = self._jvm_models[model_name]
-        spark = self.orchestrator.spark
+            if self._session is None:
+                self._session = self.orchestrator.spark.newSession()
+                self._session.conf.set("spark.sql.codegen.factoryMode",
+                                       "NO_CODEGEN")
+            spark = self._session
         df = spark.createDataFrame(_request_table(rows, feature_names))
         out = DataFrame(jvm_model.transform(df._jdf), spark)
         return [float(r[0]) for r in out.select("prediction").collect()]
@@ -198,6 +228,19 @@ class ServingService:
         out: DataFrame = model.transform(df).drop("features", "features_raw")
         out.write.mode("overwrite").parquet(output_path)
         return {"model": model_name, "input": input_path, "output": output_path}
+
+
+def _served_pipeline(model: PipelineModel) -> JavaObject:
+    """The JVM pipeline ``predict_rows`` runs for ``model``: a copy
+    whose final probabilistic classifier, when it has a raw-prediction
+    column to predict from, writes no probability column. The caller's
+    ``model`` is left as it is."""
+    served = model.copy()
+    last = served.stages[-1] if served.stages else None
+    if (isinstance(last, ProbabilisticClassificationModel)
+            and last.getRawPredictionCol()):
+        last.setProbabilityCol("")
+    return served._to_java()
 
 
 def _request_table(rows: list[list[float]],

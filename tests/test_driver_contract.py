@@ -98,6 +98,32 @@ def test_every_oracle_has_a_query():
     assert set(qs) - set(oracles) == ROWS_ONLY
 
 
+def test_session_tmp_root_removed_at_exit(tmp_path):
+    """The staged postings/merged ingest states live under one
+    per-process temp root that interpreter exit removes, so a session
+    running q178/q184/q195 leaves nothing in the temp dir."""
+    import os
+    import subprocess
+    import sys
+
+    script = (
+        "import os, sys\n"
+        f"sys.path.insert(0, {os.path.dirname(entrymod.__file__)!r})\n"
+        "import __spark_entry__ as e\n"
+        "d = e._session_tmp_dir('postings_ingest_')\n"
+        "open(os.path.join(d, 'part'), 'w').write('x')\n"
+        "print(e._SESSION_TMP_ROOT)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True,
+        env={**os.environ, "TMPDIR": str(tmp_path)}, timeout=120, check=True,
+    )
+    root = out.stdout.strip().splitlines()[-1]
+    assert os.path.dirname(root) == str(tmp_path)
+    assert not os.path.exists(root)
+    assert os.listdir(tmp_path) == []
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     got = df.collect()

@@ -40,6 +40,34 @@ def test_load_config_merges_defaults(tmp_path):
     assert load_config(str(yaml_path))["data"]["label_col"] == "y"
 
 
+def test_load_config_rejects_unknown_keys(tmp_path):
+    """A key no default names is refused with its dotted path (a
+    retired option such as corpus.ingest_maintain_lexicon used to be
+    dropped silently); free-form maps (defaults {} or None) stay open."""
+    for cfg, key in [
+        ({"corpus": {"ingest_maintain_lexicon": True}},
+         "corpus.ingest_maintain_lexicon"),
+        ({"modle": {"algorithm": "gbt"}}, "modle"),
+        ({"model": {"parms": {"max_iter": 5}}}, "model.parms"),
+    ]:
+        with pytest.raises(ValueError, match=f"unknown config key '{key}'"):
+            load_config(cfg)
+    yaml_path = tmp_path / "c.yaml"
+    yaml_path.write_text("optimization:\n  max_bucket: 8\n")
+    with pytest.raises(ValueError, match="'optimization.max_bucket'"):
+        load_config(str(yaml_path))
+    cfg = load_config({
+        "model": {"params": {"numTrees": 5}},
+        "tuning": {"grid": {"max_depth": [2, 3]}},
+        "corpus": {"ingest_quality_rules": {"min_tokens": 3},
+                   "pack": {"budget_tokens": 64}},
+    })
+    assert cfg["model"]["params"] == {"numTrees": 5}
+    assert cfg["tuning"]["grid"] == {"max_depth": [2, 3]}
+    assert cfg["corpus"]["ingest_quality_rules"] == {"min_tokens": 3}
+    assert cfg["corpus"]["pack"] == {"budget_tokens": 64}
+
+
 def test_orchestrator_full_lifecycle(spark, data_path, tmp_path):
     save_path = str(tmp_path / "model")
     orch = PipelineOrchestrator(
@@ -146,16 +174,71 @@ def test_serving_train_job_and_predict(spark, data_path, algorithm):
     rows = [[1.0, 2.0], [9.0, 3.0], [5.0, 0.0], [7.5, 6.0]]
     sc = spark.sparkContext
     group = f"serve-{algorithm}"
+    # the suite's session runs NO_CODEGEN; give the orchestrator's
+    # session the engine default, which serving must leave alone
+    mode = "spark.sql.codegen.factoryMode"
+    suite_mode = spark.conf.get(mode)
+    spark.conf.set(mode, "FALLBACK")
     sc.setJobGroup(group, "predict_rows")
     try:
         preds = svc.predict_rows(job["job_id"], rows, ["f1", "f2"])
+        session = svc._session
+        assert svc.predict_rows(job["job_id"], rows, ["f1", "f2"]) == preds
+        assert spark.conf.get(mode) == "FALLBACK"
     finally:
         sc.setJobGroup(None, None)
+        spark.conf.set(mode, suite_mode)
+    # job groups belong to the SparkContext the serving session shares
     assert sc.statusTracker().getJobIdsForGroup(group) == []
+    # requests run on one codegen-free child session
+    assert svc._session is session and session is not spark
+    assert session.conf.get(mode) == "NO_CODEGEN"
 
-    batch = svc.models[job["job_id"]].transform(
-        spark.createDataFrame(rows, ["f1", "f2"]))
+    # the served copy drops the probability column; the registered
+    # model keeps it
+    model = svc.models[job["job_id"]]
+    assert model.stages[-1].getProbabilityCol() == "probability"
+    batch = model.transform(spark.createDataFrame(rows, ["f1", "f2"]))
+    assert "probability" in batch.columns
     assert preds == [r[0] for r in batch.select("prediction").collect()]
+
+
+def test_serving_served_copy_multiclass_and_thresholds(spark, data_path):
+    """The served copy answers exactly what the registered model's batch
+    transform answers for a 3-class forest, and for the same forest
+    with class thresholds set, which move some of its predictions."""
+    svc = ServingService(PipelineOrchestrator(
+        {"features": {"categorical_columns": [], "numeric_columns": ["f1", "f2"]},
+         "model": {"params": {"num_trees": 5, "max_depth": 3}}}, spark=spark
+    ))
+    # a label no depth-3 forest fits exactly, so leaves mix classes
+    # and the thresholds have probabilities to act on
+    df = spark.read.parquet(data_path).withColumn(
+        "label", ((F.col("f1") + F.col("f2")) % 3).cast("double"))
+    model, _ = svc.orchestrator.train(df, "random_forest", "classification")
+    thresholded = model.copy()
+    thresholded.stages[-1].setThresholds([1.0, 1.0, 0.05])
+    svc.register_model("three", model)
+    svc.register_model("thresholds", thresholded)
+
+    rows = [[float(f1), float(f2)] for f1 in range(10) for f2 in (0, 3, 6)]
+    sc = spark.sparkContext
+    sc.setJobGroup("serve-multiclass", "predict_rows")
+    try:
+        served = {name: svc.predict_rows(name, rows, ["f1", "f2"])
+                  for name in ("three", "thresholds")}
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("serve-multiclass") == []
+    request = spark.createDataFrame(rows, ["f1", "f2"])
+    for name, preds in served.items():
+        assert svc.models[name].stages[-1].getProbabilityCol() == "probability"
+        jvm_stages = svc._jvm_models[name].stages()
+        assert jvm_stages[len(jvm_stages) - 1].getProbabilityCol() == ""
+        batch = svc.models[name].transform(request).select("prediction")
+        assert preds == [r[0] for r in batch.collect()]
+    assert model.stages[-1].numClasses == 3
+    assert served["thresholds"] != served["three"]
 
 
 def test_serving_predict_rows_validates_request(spark, data_path):
@@ -375,7 +458,10 @@ def test_serving_batch_predict(spark, data_path, tmp_path):
     out_path = str(tmp_path / "scored.parquet")
     info = svc.predict_batch(job["job_id"], data_path, out_path)
     assert info["output"] == out_path
-    assert spark.read.parquet(out_path).count() == 120
+    scored = spark.read.parquet(out_path)
+    assert scored.count() == 120
+    # batch scoring uses the registered model, not the served copy
+    assert "probability" in scored.columns
 
 
 def test_optimization_config_reaches_dedup_guards(spark):
